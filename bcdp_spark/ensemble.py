@@ -12,6 +12,7 @@ Reference surface mirrored (bcdp/core.py [UNVERIFIED], see SURVEY.md §0):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -176,11 +177,12 @@ class Ensemble:
         layout). Each store's rows are tagged with the store basename as
         the member name; bounds kwargs (time_bnds/lev_bnds/lat_bnds/
         lon_bnds) push down to per-store CHUNK PRUNING before any chunk
-        byte loads (sources/zarr.py)."""
+        byte loads, and every store's kept chunks decode in one packed
+        scan (``sources.zarr.load_zarr_parts``)."""
         import glob as _glob
         import os as _os
 
-        from bcdp_spark.sources.zarr import load_zarr
+        from bcdp_spark.sources.zarr import load_zarr_parts
 
         if pattern.startswith("refs::"):
             # kerchunk reference store: one virtual store per spec (no
@@ -190,20 +192,12 @@ class Ensemble:
             stores = sorted(_glob.glob(pattern))
         if not stores:
             raise FileNotFoundError(f"no stores match {pattern!r}")
-        out = None
-        space: tuple[str, ...] = ("lat", "lon")
-        for store in stores:
-            member = _os.path.basename(store.rstrip("/"))
-            if member.endswith(".zarr"):
-                member = member[: -len(".zarr")]
-            elif member.endswith(".json"):
-                member = member[: -len(".json")]
-            df = load_zarr(spark, store, var=var, **bounds).withColumn(
-                name_col, F.lit(member)
-            )
-            if "lev" in df.columns:
-                space = ("lev", "lat", "lon")
-            out = df if out is None else out.unionByName(df)
+        parts = [
+            (s, var, re.sub(r"\.(zarr|json)$", "", _os.path.basename(s.rstrip("/"))))
+            for s in stores
+        ]
+        out = load_zarr_parts(spark, parts, name_col, **bounds)
+        space = ("lev", "lat", "lon") if "lev" in out.columns else ("lat", "lon")
         return cls(out, name_col=name_col, space_cols=space)
 
     @classmethod

@@ -573,7 +573,8 @@ def hamming_near_pairs(
     # Each joined row re-derives the agree mask from the xor and keeps
     # the pair only in its FIRST agreeing chunk (no agreeing chunk
     # strictly below chunk_idx) — exactly-once emission, distinct()
-    # gone, output row set bit-identical. The per-chunk mask is a
+    # gone, output row set bit-identical (uncapped; a capped run keeps
+    # distinct(), see _emit_pairs). The per-chunk mask is a
     # constant-array lookup on chunk_idx, NOT an exploded struct field:
     # a per-side field would be pruned asymmetrically and break the
     # exchange-subtree equality that lets the fingerprint lineage
@@ -593,29 +594,38 @@ def hamming_near_pairs(
         agree = agree.bitwiseOR(
             F.when(chunk_of(xor, c) == 0, F.lit(1 << c)).otherwise(F.lit(0))
         )
+    canonical = (
+        agree.bitwiseAND(F.element_at(lo_mask_arr, F.col("a.chunk_idx") + 1))
+        == 0
+    )
     a, b = chunks.alias("a"), chunks.alias("b").hint("shuffle_hash")
-    return (
+    return _emit_pairs(
         a.join(
             b,
             (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
             & (F.col("a.chunk") == F.col("b.chunk"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(
-            (F.bit_count(xor) <= max_hamming)
-            & (
-                agree.bitwiseAND(
-                    F.element_at(lo_mask_arr, F.col("a.chunk_idx") + 1)
-                )
-                == 0
-            )
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
+        ),
+        xor, id_col, max_hamming, canonical, bucket_cap,
     )
+
+
+def _emit_pairs(joined, xor, id_col, max_hamming, canonical, bucket_cap):
+    """Hamming-filter a blocked self-join and emit each pair once.
+    Uncapped, a pair is kept only in its canonical (first agreeing)
+    bucket, so no ``distinct()`` is needed. With ``bucket_cap`` the
+    canonical bucket may be one the cap dropped while a later agreeing
+    bucket survived, so capped runs keep every emission and
+    ``distinct()`` them instead — the cap's recall promise holds."""
+    keep = F.bit_count(xor) <= max_hamming
+    if bucket_cap is None:
+        keep = keep & canonical
+    out = joined.filter(keep).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        F.bit_count(xor).alias("hamming"),
+    )
+    return out if bucket_cap is None else out.distinct()
 
 
 def hamming_multi_index_pairs(
@@ -749,7 +759,8 @@ def hamming_multi_index_pairs(
     # lo_mask/lo_bits literals baked into the explode). Every
     # radius-h pair has >= m agreeing blocks, so exactly one emission
     # survives — the distinct() and its 19M-row exchange are GONE; the
-    # output row set is bit-identical.
+    # output row set is bit-identical. A capped run keeps distinct():
+    # the canonical combo's bucket may be the one the cap dropped.
     xor = F.col("a.__h64").bitwiseXOR(F.col("b.__h64"))
 
     def block_of(col: F.Column, c: int) -> F.Column:
@@ -762,30 +773,20 @@ def hamming_multi_index_pairs(
         agree = agree.bitwiseOR(
             F.when(block_of(xor, c) == 0, F.lit(1 << c)).otherwise(F.lit(0))
         )
+    canonical = agree.bitwiseAND(
+        F.element_at(lo_mask_arr, F.col("a.combo_idx") + 1)
+    ) == F.element_at(lo_bits_arr, F.col("a.combo_idx") + 1)
     a, b = keyed.alias("a"), keyed.alias("b").hint("shuffle_hash")
-    return (
+    # hamming first (in _emit_pairs): one bit_count kills the ~70% false
+    # bucket collisions before the 14-test agree mask is evaluated
+    return _emit_pairs(
         a.join(
             b,
             (F.col("a.combo_idx") == F.col("b.combo_idx"))
             & (F.col("a.key") == F.col("b.key"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(
-            # hamming first: one bit_count kills the ~70% false bucket
-            # collisions before the 14-test agree mask is evaluated
-            (F.bit_count(xor) <= max_hamming)
-            & (
-                agree.bitwiseAND(
-                    F.element_at(lo_mask_arr, F.col("a.combo_idx") + 1)
-                )
-                == F.element_at(lo_bits_arr, F.col("a.combo_idx") + 1)
-            )
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
+        ),
+        xor, id_col, max_hamming, canonical, bucket_cap,
     )
 
 

@@ -408,18 +408,23 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of its own). Bucket size is bounded by B+1 rows — window state
     # stays bounded at any corpus size, and n/B buckets keep the work
     # wide at scale.
-    bucket = 128
+    #
+    # The bucket is doc_id >> 7: exact integer floor division by B=128
+    # for every long (double division mis-buckets ids above 2^53, and
+    # DIV truncates toward zero, which splits negative pairs such as
+    # (-128, -127) across buckets).
+    # lead() pairing needs UNIQUE doc_ids — the join emitted one pair
+    # per duplicate, lead() would silently emit one — so a duplicate
+    # (adjacent in its bucket's order) fails the query instead.
+    shift = 7
+    k = F.shiftright("doc_id", shift)
     bucketed = g.select(
         "doc_id",
         "grams",
         F.explode(
             F.when(
-                F.pmod("doc_id", F.lit(bucket)) == 0,
-                F.array(
-                    F.floor(F.col("doc_id") / bucket),
-                    F.floor(F.col("doc_id") / bucket) - 1,
-                ),
-            ).otherwise(F.array(F.floor(F.col("doc_id") / bucket)))
+                F.pmod("doc_id", F.lit(1 << shift)) == 0, F.array(k, k - 1)
+            ).otherwise(F.array(k))
         ).alias("__bucket"),
     )
     w = Window.partitionBy("__bucket").orderBy("doc_id")
@@ -428,7 +433,17 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("doc_id").over(w).alias("right_id"),
         F.col("grams").alias("ga"),
         F.lead("grams").over(w).alias("gb"),
-    ).filter(F.col("right_id") == F.col("left_id") + 1)
+    ).filter(
+        F.when(
+            F.col("right_id") == F.col("left_id"),
+            F.raise_error(
+                F.concat(
+                    F.lit("q_ngram_jaccard: duplicate doc_id "),
+                    F.col("left_id").cast("string"),
+                )
+            ),
+        ).otherwise(F.col("right_id") == F.col("left_id") + 1)
+    )
     return paired.select(
         "left_id",
         "right_id",

@@ -14,6 +14,19 @@ one row per partition, and the manifest values ride the plan as literal
 arrays indexed by the range id. Determinism: callers sort their file
 lists first (they always did); slice i holds row i.
 
+Per-task cost and packing: every Python task pays a fixed worker cost,
+about 0.2 CPU s on Spark 4.1 / CPython 3.11, whatever it decodes.
+pyspark's per-task ``setup_spark_files`` calls
+``importlib.invalidate_caches()``, which on CPython 3.11 re-reads the
+``pyspark.zip`` directory once per cached zip importer (16 in a
+worker). Decoding a small chunk costs milliseconds, so one task per
+chunk is mostly overhead. ``slices`` packs the manifest into fewer
+partitions of contiguous rows: the Zarr loader uses
+``min(n, defaultParallelism)``, one task per slot. The trade-off at
+scale is fewer, larger retry units — a failed or straggling task
+redoes its whole slice. The other loaders still spread one file per
+task.
+
 Scale note (100 TB): manifests here are file/chunk lists (thousands of
 entries); both the old LocalRelation and these literals live in the
 plan, so plan size is unchanged. For manifests beyond plan-size comfort
@@ -28,16 +41,19 @@ from pyspark.sql import functions as F
 
 
 def spread_manifest(
-    spark: SparkSession, rows: list[tuple], schema: str
+    spark: SparkSession, rows: list[tuple], schema: str,
+    slices: int | None = None,
 ) -> DataFrame:
-    """Build a manifest DataFrame with one row per partition and no
-    Exchange. ``rows`` are tuples matching the DDL ``schema`` (e.g.
-    ``"path string"`` or ``"refs_path string, offset long"``)."""
+    """Build a manifest DataFrame with no Exchange: one row per
+    partition, or — with ``slices`` — ``slices`` partitions of
+    contiguous rows in input order. ``rows`` are tuples matching the
+    DDL ``schema`` (e.g. ``"path string"`` or ``"refs_path string,
+    offset long"``)."""
     n = len(rows)
     if n == 0:
         return spark.createDataFrame([], schema)
     names = [c.strip().split()[0].strip("`") for c in schema.split(",")]
-    base = spark.range(0, n, 1, n)
+    base = spark.range(0, n, 1, slices or n)
     idx = (F.col("id") + 1).cast("int")
     sel = [
         F.element_at(F.lit([r[i] for r in rows]), idx).alias(names[i])

@@ -12,9 +12,10 @@ arrays follow the xarray convention (``_ARRAY_DIMENSIONS`` in
 ``bcdp_spark.sources.cfcal`` exactly like the NetCDF path.
 
 Scale design (the reason Zarr exists): the chunk grid IS the unit of
-parallelism — one task per chunk, linear scaling with executors at
-100 TB. Bounds predicates are pushed down to CHUNK PRUNING: the tiny
-1-D coordinate arrays are decoded driver-side, each chunk's coordinate
+work — tasks decode contiguous slices of one chunk manifest, at most
+one task per slot, scaling linearly with executors at 100 TB. Bounds
+predicates are pushed down to CHUNK PRUNING: the tiny 1-D coordinate
+arrays are decoded driver-side, each chunk's coordinate
 span is computed in closed form, and chunks wholly outside the request
 never leave object storage (the same hyperslab pushdown the NetCDF
 DataSource does, but native to the format's layout). An exact
@@ -40,6 +41,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F, types as T
 
 from bcdp_spark.sources.netcdf import (
     LONG_FORM_SCHEMA,
@@ -1219,8 +1221,6 @@ def _plan_chunks(
             if d == dims[0]
             else np.asarray(vals, dtype="float64")
         )
-    tname, latname, lonname = dims[0], dims[-2], dims[-1]
-    levname = dims[1] if has_lev else None
 
     tb = None
     if time_bnds is not None:
@@ -1236,68 +1236,84 @@ def _plan_chunks(
     for g in ngrid:
         idxs = [i + (j,) for i in idxs for j in range(g)]
 
-    def _chunk_coord(d_pos: int, dname: str, i: int) -> np.ndarray:
-        c = meta.chunks[d_pos]
-        return coords[dname][i * c : min((i + 1) * c, meta.shape[d_pos])]
-
     kept: list[tuple[int, ...]] = []
     for idx in idxs:
-        t_vals = _chunk_coord(0, tname, idx[0])
+        t_vals = _chunk_coord(meta, coords, 0, idx[0])
         if tb is not None and not (
             t_vals.max() >= tb[0] and t_vals.min() <= tb[1]
         ):
             continue
         if has_lev and not _span_overlaps(
-            _chunk_coord(1, levname, idx[1]), lev_bnds
+            _chunk_coord(meta, coords, 1, idx[1]), lev_bnds
         ):
             continue
-        if not _span_overlaps(
-            _chunk_coord(len(idx) - 2, latname, idx[-2]), lat_bnds
-        ):
+        if not _span_overlaps(_chunk_coord(meta, coords, -2, idx[-2]), lat_bnds):
             continue
-        if not _span_overlaps(
-            _chunk_coord(len(idx) - 1, lonname, idx[-1]), lon_bnds
-        ):
+        if not _span_overlaps(_chunk_coord(meta, coords, -1, idx[-1]), lon_bnds):
             continue
         kept.append(idx)
     return name, meta, coords, kept, len(idxs)
 
 
+def _chunk_coord(meta: ZArrayMeta, coords: dict, d: int, i: int) -> np.ndarray:
+    """Coordinate values of grid cell ``i`` along dimension ``d``."""
+    c, s = meta.chunks[d], meta.shape[d]
+    return coords[meta.dims[d]][i * c : min((i + 1) * c, s)]
+
+
 def load_zarr(
+    spark: SparkSession, store: str, var: str | None = None, **bounds
+) -> DataFrame:
+    """Zarr v2 store → long form (name, time[, lev], lat, lon, value);
+    the one-part ``load_zarr_parts``, with bounds kwargs (time_bnds/
+    lev_bnds/lat_bnds/lon_bnds) pushed down to chunk pruning."""
+    return load_zarr_parts(spark, [(store, var, None)], "name", **bounds)
+
+
+def load_zarr_parts(
     spark: SparkSession,
-    store: str,
-    var: str | None = None,
+    parts: "list[tuple[str, str | None, str | None]]",
+    tag_col: str = "name",
     time_bnds: tuple | None = None,
     lev_bnds: tuple[float, float] | None = None,
     lat_bnds: tuple[float, float] | None = None,
     lon_bnds: tuple[float, float] | None = None,
     **_options,
 ) -> DataFrame:
-    """Zarr v2 store → long form (name, time[, lev], lat, lon, value),
-    one task per data-variable chunk, with bounds pushed down to chunk
-    pruning (see module docstring)."""
-    name, meta, coords, kept, _total = _plan_chunks(
-        store, var, time_bnds, lev_bnds, lat_bnds, lon_bnds
-    )
-    dims = meta.dims
-    has_lev = len(meta.shape) == 4
-    tname, latname, lonname = dims[0], dims[-2], dims[-1]
-    levname = dims[1] if has_lev else None
-
-    def _chunk_coord(d_pos: int, dname: str, i: int) -> np.ndarray:
-        c = meta.chunks[d_pos]
-        return coords[dname][i * c : min((i + 1) * c, meta.shape[d_pos])]
-
+    """(store, var, tag) parts → one long form, rows in part then chunk
+    order. Every part's kept chunks share ONE manifest, decoded by at
+    most ``defaultParallelism`` tasks over contiguous slices (task
+    count, not decode work, is the cost: ``sources/manifest.py``). A
+    tag replaces the variable name when ``tag_col`` is ``"name"``
+    (``None`` keeps it); any other ``tag_col`` is appended as a column.
+    All parts must share a rank (3-D or 4-D)."""
+    if not parts:
+        raise ValueError("nothing to load: no stores or variables given")
+    plans, rows = [], []
+    for p, (store, var, tag) in enumerate(parts):
+        name, meta, coords, kept, _total = _plan_chunks(
+            store, var, time_bnds, lev_bnds, lat_bnds, lon_bnds
+        )
+        if plans and len(meta.shape) != len(plans[0][2].shape):
+            raise ValueError(
+                f"{store}: {name} is {len(meta.shape)}-D but {plans[0][0]} "
+                f"is {len(plans[0][2].shape)}-D; one load needs one rank"
+            )
+        plans.append((store, name, meta, coords, tag))
+        rows += [(p, ",".join(map(str, idx))) for idx in kept]
+    has_lev = len(plans[0][2].shape) == 4
     schema = LONG_FORM_SCHEMA_4D if has_lev else LONG_FORM_SCHEMA
-    if not kept:
+    if tag_col != "name":
+        schema = T.StructType([*schema.fields]).add(tag_col, "string")
+    if not rows:
         return spark.createDataFrame([], schema)
 
     from bcdp_spark.sources.manifest import spread_manifest
 
     manifest = spread_manifest(
-        spark, [(",".join(map(str, idx)),) for idx in kept], "chunk string"
+        spark, rows, "part int, chunk string",
+        slices=min(len(rows), spark.sparkContext.defaultParallelism),
     )
-    var_attrs = dict(meta.attrs)
     # authenticated stores (r10): executors sign exactly like the
     # driver — the registry snapshot rides the task closure (signers
     # are picklable dataclasses), no environment contract needed
@@ -1308,39 +1324,35 @@ def load_zarr(
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         restore_signers(_signers)
         for pdf in batches:
-            for chunk_key in pdf["chunk"]:
+            for part, chunk_key in zip(pdf["part"], pdf["chunk"]):
+                store, name, meta, coords, tag = plans[part]
                 idx = tuple(int(x) for x in chunk_key.split(","))
-                data = _apply_fill(
-                    np.asarray(_read_chunk(store, name, idx, meta), dtype=float),
-                    var_attrs,
+                data = np.asarray(_read_chunk(store, name, idx, meta), dtype=float)
+                span = functools.partial(_chunk_coord, meta, coords)
+                frame = _long_form(
+                    tag if tag is not None and tag_col == "name" else name,
+                    pd.DatetimeIndex(span(0, idx[0])),
+                    span(-2, idx[-2]),
+                    span(-1, idx[-1]),
+                    _apply_fill(data, meta.attrs),
+                    levs=span(1, idx[1]) if has_lev else None,
                 )
-                times = pd.DatetimeIndex(_chunk_coord(0, tname, idx[0]))
-                lats = _chunk_coord(len(idx) - 2, latname, idx[-2])
-                lons = _chunk_coord(len(idx) - 1, lonname, idx[-1])
-                levs = _chunk_coord(1, levname, idx[1]) if has_lev else None
-                yield _long_form(name, times, lats, lons, data, levs=levs)
+                if tag_col != "name":
+                    frame[tag_col] = tag
+                yield frame
 
     df = manifest.mapInPandas(decode, schema=schema)
-    # exact bounds re-applied in-plan (pruning is an optimization only)
+    # exact bounds re-applied in-plan (pruning is an optimization only);
+    # time bounds are string literals cast under the SESSION timezone —
+    # a naive Python datetime would convert through the HOST zone
+    # (TimestampType.toInternal uses local mktime) and silently shift
+    # the bound on any non-UTC box
     if time_bnds is not None:
-        # string literals cast under the SESSION timezone — a naive
-        # Python datetime would convert through the HOST zone
-        # (TimestampType.toInternal uses local mktime) and silently
-        # shift the bound on any non-UTC box
-        from pyspark.sql import functions as _F
-
-        df = df.filter(
-            (df.time >= _F.lit(str(pd.Timestamp(time_bnds[0])))
-             .cast("timestamp"))
-            & (df.time <= _F.lit(str(pd.Timestamp(time_bnds[1])))
-               .cast("timestamp"))
-        )
-    if lev_bnds is not None and has_lev:
-        df = df.filter((df.lev >= lev_bnds[0]) & (df.lev <= lev_bnds[1]))
-    if lat_bnds is not None:
-        df = df.filter((df.lat >= lat_bnds[0]) & (df.lat <= lat_bnds[1]))
-    if lon_bnds is not None:
-        df = df.filter((df.lon >= lon_bnds[0]) & (df.lon <= lon_bnds[1]))
+        time_bnds = [F.lit(str(pd.Timestamp(t))).cast("timestamp") for t in time_bnds]
+    for col, bnds in (("time", time_bnds), ("lev", lev_bnds if has_lev else None),
+                      ("lat", lat_bnds), ("lon", lon_bnds)):
+        if bnds is not None:
+            df = df.filter(df[col].between(*bnds))
     return df
 
 
@@ -1686,17 +1698,10 @@ def load_zarr_vars(
     var_col: str = "name",
     **bounds,
 ) -> DataFrame:
-    """Multi-variable store load (xarray multi-var Dataset parity): union
-    the long forms of several data variables, tagged by variable name.
-    Bounds kwargs push down to per-variable chunk pruning."""
-    if not variables:
-        raise ValueError("variables must be a non-empty list")
-    from pyspark.sql import functions as F
-
-    out = None
-    for v in variables:
-        df = load_zarr(spark, store, var=v, **bounds).withColumn(
-            var_col, F.lit(v)
-        )
-        out = df if out is None else out.unionByName(df)
-    return out
+    """Multi-variable store load (xarray multi-var Dataset parity): the
+    long forms of several data variables in one packed scan, tagged by
+    variable name. Bounds kwargs push down to per-variable chunk
+    pruning."""
+    return load_zarr_parts(
+        spark, [(store, v, v) for v in variables], var_col, **bounds
+    )

@@ -135,11 +135,9 @@ class ZarrReader(DataSourceReader):
             self._planned = (name, meta, coords, dims, colnames)
         return self._planned
 
-    def _chunk_coord(self, meta, coords, dims, pos: int, i: int) -> np.ndarray:
-        c = meta.chunks[pos]
-        return coords[dims[pos]][i * c : min((i + 1) * c, meta.shape[pos])]
-
     def partitions(self) -> list[_ZChunk]:
+        from bcdp_spark.sources.zarr import _chunk_coord
+
         name, meta, coords, dims, colnames = self._plan()
         ngrid = [(s + c - 1) // c for s, c in zip(meta.shape, meta.chunks)]
         idxs = [()]
@@ -149,7 +147,7 @@ class ZarrReader(DataSourceReader):
         for idx in idxs:
             keep = True
             for pos, col in enumerate(colnames):
-                span = self._chunk_coord(meta, coords, dims, pos, idx[pos])
+                span = _chunk_coord(meta, coords, pos, idx[pos])
                 if not _axis_mask(span, self._filters, col).any():
                     keep = False
                     break
@@ -163,7 +161,7 @@ class ZarrReader(DataSourceReader):
         import pyarrow as pa
 
         from bcdp_spark.sources.netcdf import _apply_fill
-        from bcdp_spark.sources.zarr import _read_chunk
+        from bcdp_spark.sources.zarr import _chunk_coord, _read_chunk
 
         name, meta, coords, dims, colnames = self._plan()
         idx = tuple(partition.idx)
@@ -172,7 +170,7 @@ class ZarrReader(DataSourceReader):
             dict(meta.attrs),
         )
         axes = [
-            self._chunk_coord(meta, coords, dims, pos, idx[pos])
+            _chunk_coord(meta, coords, pos, idx[pos])
             for pos in range(len(idx))
         ]
         # hyperslab: mask each axis BEFORE the mesh exists

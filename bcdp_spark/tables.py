@@ -52,22 +52,37 @@ def _tune_session(spark: SparkSession) -> None:
 # Sharing the lazy base DataFrame is semantics-free: DataFrames are
 # immutable, downstream plans are brand-new objects (no cross-query
 # stage or shuffle reuse is introduced — exchanges are new physical
-# instances per query), and nothing is collected or persisted here. A
-# stopped session's entries die with its key (a new get_spark() returns
-# a new session object).
+# instances per query), and nothing is collected or persisted here.
+#
+# Bound: every handle references its session, so a weak key could never
+# die; instead each miss evicts the handles of STOPPED sessions, which
+# leaves at most one entry per (live session, dir, table).
+#
+# Contract: a fixture dir must stay unchanged for the life of the
+# process. The handle keeps the file listing and schema resolved at its
+# first read, so rewriting the files behind it serves a stale listing.
 _HANDLES: dict[tuple, DataFrame] = {}
+
+
+def _stopped(spark: SparkSession) -> bool:
+    # SparkContext.stop() drops its JVM handle; a stopped session's
+    # context never gets one back
+    return getattr(getattr(spark, "_sc", None), "_jsc", None) is None
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Column pruning / filter pushdown happen in
     the caller's plan — do not collect or cache here (the module-level
-    memo above shares the lazy HANDLE only)."""
+    memo above shares the lazy HANDLE only; ``sf_dir`` must not be
+    rewritten while the process lives)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     key = (spark, sf_dir, name)
     hit = _HANDLES.get(key)
     if hit is not None:
         return hit
+    for stale in [k for k in _HANDLES if _stopped(k[0])]:
+        del _HANDLES[stale]
     df = _load_table(spark, sf_dir, name)
     _HANDLES[key] = df
     return df

@@ -684,3 +684,152 @@ def test_ensemble_wsdi_q_validated_and_nondecile_rejected(spark):
     r = Ensemble(df).wsdi("2001-01-11", k=3, q=0.5).collect()[0]
     assert r["wsdi"] == 3 and r["n_spells"] == 1
     assert r["longest_run"] == 3
+
+
+# -- packed Zarr scan: from_zarr decodes every store in one manifest ----
+
+
+def _zarr_member(path, offset, lev=False, chunks=None, nt=12):
+    """One member store: (time[, lev], lat, lon) float64 with a _FillValue
+    hole, chunked so several chunks per store survive or get pruned."""
+    import numpy as np
+
+    from bcdp_spark.sources.zarr import write_zarr
+
+    shape = (nt, 2, 4, 6) if lev else (nt, 4, 6)
+    data = np.arange(np.prod(shape), dtype="float64").reshape(shape) + offset
+    data.flat[5] = -999.0
+    dims = ["time", "lev", "lat", "lon"] if lev else ["time", "lat", "lon"]
+    variables = {
+        "time": (["time"], np.arange(nt, dtype="float64"),
+                 {"units": "days since 2001-01-01"}),
+        "lat": (["lat"], np.linspace(-45.0, 45.0, 4), {}),
+        "lon": (["lon"], np.arange(6) * 60.0, {}),
+        "tas": (dims, data, {"_FillValue": -999.0}),
+    }
+    if lev:
+        variables["lev"] = (["lev"], np.array([850.0, 500.0]), {})
+    write_zarr(
+        str(path), dims=dict(zip(dims, shape)), variables=variables,
+        chunks={"tas": chunks or ((4, 1, 2, 3) if lev else (4, 2, 3))},
+    )
+    return str(path)
+
+
+def _per_store_reference(spark, stores, name_col="name", **bounds):
+    """The pre-packing semantics: one load_zarr per store, tagged with
+    the member name and unioned in store order."""
+    import os
+
+    from bcdp_spark.sources.zarr import load_zarr
+
+    out = None
+    for s in stores:
+        member = os.path.basename(s)[: -len(".zarr")]
+        df = load_zarr(spark, s, var="tas", **bounds).withColumn(
+            name_col, F.lit(member)
+        )
+        out = df if out is None else out.unionByName(df)
+    return out
+
+
+def _assert_same_rows(got, want):
+    assert got.columns == want.columns
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+
+def test_from_zarr_packed_matches_per_store_with_pruning(spark, tmp_path):
+    from bcdp_spark.ensemble import Ensemble
+    from bcdp_spark.sources.zarr import pruned_chunk_count
+
+    stores = [_zarr_member(tmp_path / f"m{i}.zarr", 100.0 * i) for i in range(3)]
+    bounds = dict(time_bnds=("2001-01-02", "2001-01-06"), lat_bnds=(0.0, 90.0))
+    kept = [pruned_chunk_count(s, var="tas", **bounds) for s in stores]
+    assert all(0 < k < t for k, t in kept)  # every store prunes
+    ens = Ensemble.from_zarr(spark, str(tmp_path / "m*.zarr"), var="tas", **bounds)
+    _assert_same_rows(ens.df, _per_store_reference(spark, stores, **bounds))
+    assert ens.df.filter("time > '2001-01-06' OR lat < 0").count() == 0
+
+
+def test_from_zarr_packed_4d_lev(spark, tmp_path):
+    from bcdp_spark.ensemble import Ensemble
+
+    stores = [
+        _zarr_member(tmp_path / f"m{i}.zarr", 10.0 * i, lev=True) for i in range(2)
+    ]
+    ens = Ensemble.from_zarr(
+        spark, str(tmp_path / "m*.zarr"), var="tas", lev_bnds=(400.0, 600.0)
+    )
+    assert ens.space_cols == ("lev", "lat", "lon")
+    want = _per_store_reference(spark, stores, lev_bnds=(400.0, 600.0))
+    _assert_same_rows(ens.df, want)
+    assert {r.lev for r in ens.df.select("lev").distinct().collect()} == {500.0}
+
+
+def test_from_zarr_packed_absent_chunk_is_fill_value(spark, tmp_path):
+    import json
+    import os
+
+    from bcdp_spark.ensemble import Ensemble
+
+    stores = [_zarr_member(tmp_path / f"m{i}.zarr", 100.0 * i) for i in range(2)]
+    # give store m1 a numeric fill_value, then delete one of its chunks
+    za_path = os.path.join(stores[1], "tas", ".zarray")
+    za = json.load(open(za_path))
+    za["fill_value"] = -999.0
+    json.dump(za, open(za_path, "w"))
+    zm_path = os.path.join(stores[1], ".zmetadata")
+    if os.path.exists(zm_path):
+        zm = json.load(open(zm_path))
+        zm["metadata"]["tas/.zarray"] = za
+        json.dump(zm, open(zm_path, "w"))
+    os.remove(os.path.join(stores[1], "tas", "1.0.1"))
+    ens = Ensemble.from_zarr(spark, str(tmp_path / "m*.zarr"), var="tas")
+    _assert_same_rows(ens.df, _per_store_reference(spark, stores))
+    # the absent chunk (4 steps x 2 lats x 3 lons) reads as fill -> NaN
+    hole = ens.df.filter(
+        "name = 'm1' AND time >= '2001-01-05' AND time < '2001-01-09' "
+        "AND lat < 0 AND lon >= 180"
+    ).toPandas()
+    assert len(hole) == 24 and hole.value.isna().all()
+
+
+def test_from_zarr_packed_member_name_col(spark, tmp_path):
+    """name_col other than "name" keeps the variable's name column and
+    appends the member column last, exactly as the per-store union did."""
+    from bcdp_spark.ensemble import Ensemble
+
+    stores = [_zarr_member(tmp_path / f"m{i}.zarr", 100.0 * i) for i in range(2)]
+    ens = Ensemble.from_zarr(
+        spark, str(tmp_path / "m*.zarr"), var="tas", name_col="member"
+    )
+    assert ens.df.columns == ["name", "time", "lat", "lon", "value", "member"]
+    assert ens.name_col == "member"
+    _assert_same_rows(ens.df, _per_store_reference(spark, stores, "member"))
+    assert {r.name for r in ens.df.select("name").distinct().collect()} == {"tas"}
+
+
+def test_from_zarr_five_stores_one_python_task_per_slot(spark, tmp_path):
+    """Five stores x 4 chunks: one MapInPandas, no Union, and the
+    manifest is packed into min(chunks, defaultParallelism) tasks."""
+    from bcdp_spark.ensemble import Ensemble
+
+    for i in range(5):
+        _zarr_member(tmp_path / f"m{i}.zarr", float(i), chunks=(6, 2, 3))
+    ens = Ensemble.from_zarr(spark, str(tmp_path / "m*.zarr"), var="tas")
+    plan = ens.df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "Union" not in plan
+    n_chunks = 5 * 2 * 2 * 2
+    want = min(n_chunks, spark.sparkContext.defaultParallelism)
+    assert ens.df.rdd.getNumPartitions() == want
+    assert ens.df.count() == 5 * 12 * 4 * 6
+
+
+def test_from_zarr_mixed_rank_names_the_store(spark, tmp_path):
+    from bcdp_spark.ensemble import Ensemble
+
+    _zarr_member(tmp_path / "a.zarr", 0.0)
+    _zarr_member(tmp_path / "b.zarr", 0.0, lev=True)
+    with pytest.raises(ValueError, match="b.zarr"):
+        Ensemble.from_zarr(spark, str(tmp_path / "*.zarr"), var="tas")

@@ -1160,6 +1160,28 @@ def test_ensemble_from_zarr_accepts_refs_store(spark, tmp_path):
     assert pdf.value.sum() == pytest.approx(np.nansum(expect))
 
 
+def test_ensemble_from_zarr_refs_store_matches_load_zarr(spark, tmp_path):
+    """A single refs:: store through the packed scan: the same rows, in
+    the same order, as load_zarr tagged with the member name."""
+    from pyspark.sql import functions as F
+
+    from bcdp_spark.ensemble import Ensemble
+    from bcdp_spark.sources.kerchunk import netcdf3_refs, write_refs
+    from bcdp_spark.sources.zarr import load_zarr
+
+    nc_path, expect = _write_nc(tmp_path, record=True)
+    rp = str(tmp_path / "member0.json")
+    write_refs(netcdf3_refs(nc_path), rp)
+    bounds = dict(time_bnds=("2000-01-02", "2000-01-04"), lat_bnds=(0.0, 90.0))
+    got = Ensemble.from_zarr(spark, f"refs::{rp}", **bounds).df
+    want = load_zarr(spark, f"refs::{rp}", **bounds).withColumn(
+        "name", F.lit("member0")
+    )
+    assert got.columns == want.columns
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    assert got.count() == 3 * 2 * 4
+
+
 def test_remote_indexing_reads_headers_only(tmp_path):
     """Index an archive you never download: netcdf3_refs and hdf5_refs
     over loopback HTTP fetch header pages, not the payload."""

@@ -1718,6 +1718,64 @@ def test_hamming_bucket_cap_preserves_close_pairs(spark):
     assert all(a >= 1000 for a, _ in got)
 
 
+def _signed64(v: int) -> int:
+    v &= (1 << 64) - 1
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def test_hamming_bucket_cap_canonical_bucket_over_cap_keeps_pair(spark):
+    """The pair's FIRST agreeing chunk (its canonical bucket) is over the
+    cap, a later agreeing chunk is sparse: the pair must still be kept,
+    and exactly once."""
+    from bcdp_spark.operators.dedup import hamming_near_pairs
+
+    # 4 x 16-bit chunks at h=3. The crowd shares chunk 0 (0xABCD) with
+    # the pair and scatters chunks 1-3.
+    rows = [
+        (i, ((i + 2000) << 48) | ((i + 1000) << 32) | (i << 16) | 0xABCD)
+        for i in range(1, 61)
+    ]
+    a = 0x7777_1234_5555_ABCD
+    rows += [(1000, a), (1001, a ^ (1 << 16))]  # differ in chunk 1 only
+    df = spark.createDataFrame(rows, "vid long, h long")
+    got = [
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in hamming_near_pairs(
+            df, "h", "vid", max_hamming=3, bucket_cap=50
+        ).collect()
+    ]
+    assert got == [(1000, 1001, 1)]
+    # uncapped, canonical emission still yields each pair once (the
+    # crowd's close neighbours agree on chunk 0 only and now appear too)
+    full = [
+        (r["id_a"], r["id_b"])
+        for r in hamming_near_pairs(df, "h", "vid", max_hamming=3).collect()
+    ]
+    assert (1000, 1001) in full and len(full) == len(set(full)) > 1
+
+
+def test_hamming_multi_index_cap_canonical_combo_over_cap_keeps_pair(spark):
+    """Multi-index twin: the lexicographically first agreeing combo
+    (blocks 0+1) is over the cap, a later combo (0+3) is sparse."""
+    from bcdp_spark.operators.dedup import hamming_multi_index_pairs
+
+    # blocks=5 at h=3: widths 13,13,13,13,12, combos of m=2 blocks
+    low26 = 0x2468ACE & ((1 << 26) - 1)
+    rows = [
+        (i, _signed64(((i * 0x9E3779B97F4A7C15) >> 26 << 26) | low26))
+        for i in range(1, 61)
+    ]
+    a = _signed64(0x1357_9BDF_0000_0000 | low26)
+    rows += [(1000, a), (1001, a ^ (1 << 30))]  # differ in block 2 only
+    df = spark.createDataFrame(rows, "vid long, h long")
+    got = hamming_multi_index_pairs(
+        df, "h", "vid", max_hamming=3, blocks=5, bucket_cap=50
+    ).collect()
+    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in got] == [
+        (1000, 1001, 1)
+    ]
+
+
 def test_ivf_pq_composition(spark):
     """r4: IVF-PQ — coarse-quantize to cells (lloyd_kmeans), PQ-encode
     only cell members, ADC-scan the probed cell. The composed pipeline
@@ -2805,6 +2863,42 @@ def test_ngram_jaccard_bucket_pairing_handles_gaps_and_boundaries(
     assert got == want
     assert (127, 128) in got and (128, 129) in got  # boundary pair found once
     assert (1, 2) in got
+
+
+def test_ngram_jaccard_ids_above_2_53_and_negative(spark, tmp_path):
+    """The bucket is exact integer floor division: ids above 2^53 (where
+    a double division rounds) and negative ids straddling bucket
+    boundaries still pair every (i, i+1) exactly once."""
+    from bcdp_spark.queries.text import q_ngram_jaccard
+
+    big = 1 << 60
+    ids = [big + d for d in (-129, -128, -127, -2, -1, 0, 1, 2, 127, 128, 129)]
+    ids += [(1 << 53) + d for d in (-1, 0, 1, 2, 3)]
+    ids += [-257, -256, -255, -129, -128, -127, -1, 0, 1]
+    rows = [(i, f"document {i % 5} with shared words") for i in ids]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        f"{tmp_path}/documents.parquet"
+    )
+    got = [
+        (r["left_id"], r["right_id"])
+        for r in q_ngram_jaccard(spark, str(tmp_path)).collect()
+    ]
+    want = {(i, i + 1) for i in ids if i + 1 in set(ids)}
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+def test_ngram_jaccard_duplicate_doc_id_fails_loudly(spark, tmp_path):
+    """lead() pairing assumes unique doc_ids: a duplicate must fail the
+    query rather than silently emit fewer pairs than the join would."""
+    from bcdp_spark.queries.text import q_ngram_jaccard
+
+    rows = [(1, "some text here"), (2, "more text here"), (2, "again text")]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        f"{tmp_path}/documents.parquet"
+    )
+    with pytest.raises(Exception, match="duplicate doc_id 2"):
+        q_ngram_jaccard(spark, str(tmp_path)).collect()
 
 
 def test_fuzzy_match_count_factorization_edges(spark, tmp_path):

@@ -808,6 +808,67 @@ def test_load_zarr_vars_multi_variable(spark, tmp_path):
     assert len(sub) == 2 * nt * 1 * no
 
 
+def test_load_zarr_vars_packed_scan_matches_per_variable(spark, tmp_path):
+    """load_zarr_vars is one packed scan: one MapInPandas, no Union, the
+    same rows in the same order as per-variable load_zarr + tagging, and
+    a var_col other than "name" appended after the long form."""
+    from bcdp_spark.sources.zarr import load_zarr_vars
+
+    store = str(tmp_path / "multi.zarr")
+    nt, na, no = 8, 4, 6
+    base = np.arange(nt * na * no, dtype="float64").reshape(nt, na, no)
+    write_zarr(
+        store,
+        dims={"time": nt, "lat": na, "lon": no},
+        variables={
+            "time": (["time"], np.arange(nt, dtype="float64"),
+                     {"units": "days since 2001-01-01"}),
+            "lat": (["lat"], np.linspace(-30.0, 30.0, na), {}),
+            "lon": (["lon"], np.arange(no) * 10.0, {}),
+            "pr": (["time", "lat", "lon"], base, {}),
+            "tas": (["time", "lat", "lon"], base * 2.0, {}),
+        },
+        chunks={"pr": (4, 2, 3), "tas": (4, 2, 3)},
+    )
+    bounds = dict(lat_bnds=(0.0, 90.0), lon_bnds=(0.0, 25.0))
+    got = load_zarr_vars(spark, store, ["tas", "pr"], var_col="variable", **bounds)
+    assert got.columns == ["name", "time", "lat", "lon", "value", "variable"]
+    want = None
+    for v in ("tas", "pr"):
+        df = load_zarr(spark, store, var=v, **bounds).withColumn(
+            "variable", F.lit(v)
+        )
+        want = df if want is None else want.unionByName(df)
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1 and "Union" not in plan
+    # 2 variables x 2 time chunks x 1 kept lat chunk x 1 kept lon chunk
+    assert got.rdd.getNumPartitions() == min(
+        4, spark.sparkContext.defaultParallelism
+    )
+
+
+def test_load_zarr_vars_mixed_rank_raises_value_error(spark, tmp_path):
+    from bcdp_spark.sources.zarr import load_zarr_vars
+
+    store = str(tmp_path / "mixed.zarr")
+    write_zarr(
+        store,
+        dims={"time": 2, "lev": 2, "lat": 2, "lon": 2},
+        variables={
+            "time": (["time"], np.arange(2, dtype="float64"),
+                     {"units": "days since 2001-01-01"}),
+            "lev": (["lev"], np.array([850.0, 500.0]), {}),
+            "lat": (["lat"], np.array([-10.0, 10.0]), {}),
+            "lon": (["lon"], np.array([0.0, 90.0]), {}),
+            "ps": (["time", "lat", "lon"], np.zeros((2, 2, 2)), {}),
+            "ta": (["time", "lev", "lat", "lon"], np.zeros((2, 2, 2, 2)), {}),
+        },
+    )
+    with pytest.raises(ValueError, match="mixed.zarr.*4-D"):
+        load_zarr_vars(spark, store, ["ps", "ta"])
+
+
 def test_select_var_on_multi_var_ensemble(spark, tmp_path):
     from bcdp_spark.ensemble import Ensemble
     from bcdp_spark.sources.zarr import load_zarr_vars, write_zarr
