@@ -39,7 +39,9 @@ def connected_components(
 ) -> DataFrame:
     """Labels every node reachable through ``edges`` with the minimum
     node id of its component. Returns (node, label). Undirected: edges
-    are symmetrized internally; self-loops and duplicates are fine."""
+    are symmetrized internally; self-loops and duplicates are fine.
+    Raises ``RuntimeError`` when labels still change in round
+    ``max_iter`` — it never returns unconverged labels."""
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -100,7 +102,11 @@ def _cc_loop(sym, labels, max_iter, checkpoint_every):
             if changed == 0:
                 return new_labels
         labels = new_labels
-    return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        "(max_iter): labels still changed in the last round; raise "
+        "max_iter"
+    )
 
 
 def cluster_summary(labels: DataFrame) -> DataFrame:

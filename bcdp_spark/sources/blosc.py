@@ -1,11 +1,11 @@
-"""Blosc v1 chunk codec (decode + fixture encode) with an LZ4-block
-coder — no third-party libraries.
+"""Blosc v1 chunk container (decode + fixture encode). This module owns
+the framing only; the inner codecs come from the codec table in
+``sources/codecs.py``.
 
 Blosc is zarr-python's DEFAULT v2 compressor (``Blosc(cname='lz4',
 shuffle=SHUFFLE)``), so most real-world v2 stores a user points
-``format('zarr')`` at are blosc-framed. Everything here is implemented
-from the public c-blosc 1.x container format and the public LZ4 block
-format:
+``format('zarr')`` at are blosc-framed. The framing is implemented
+from the public c-blosc 1.x container format:
 
 16-byte header::
 
@@ -31,147 +31,34 @@ uncompressed size means the bytes are stored raw. Byte-shuffle is
 applied per block before splitting (each split is then exactly one
 byte-plane).
 
-Supported codecs: blosclz (own codec, ``sources/blosclz.py`` — r8,
-c-blosc's historical default cname), lz4/lz4hc (own block decoder
-below), zlib (stdlib), zstd (own RFC 8878 decoder, ``sources/zstd.py``
-— r5), snappy (own raw-block decoder, ``sources/snappy.py`` — r7,
-certified against pyarrow's libsnappy), and raw/memcpy.
+Inner codecs (codec id -> table name in ``_CODECS``; ``lz4hc`` writes
+the lz4 block format under id 1): lz4, snappy and zstd decode natively
+through pyarrow; zlib is the stdlib's; blosclz (c-blosc's historical
+default) stays pure Python because pyarrow has no native twin. Raw and
+memcpy'ed blocks need no codec.
 """
 
 from __future__ import annotations
 
 import struct
-import zlib as _zlib
 
 import numpy as np
 
+from bcdp_spark.sources import codecs
+
 _MAX_SPLITS = 16
 _MIN_BUFFERSIZE = 128
+# codec id (flags bits 5-7) -> codec-table name, and cname -> codec id
 _CODECS = {0: "blosclz", 1: "lz4", 2: "snappy", 3: "zlib", 4: "zstd"}
+CNAMES = {**{v: k for k, v in _CODECS.items()}, "lz4hc": 1}
+_SPLIT_CODECS = (0, 1)  # c-blosc splits blosclz and lz4 blocks only
 _SHUFFLE, _MEMCPY, _BITSHUFFLE = 0x1, 0x2, 0x4
 
 
-# -- LZ4 block format --------------------------------------------------
-
-
-def lz4_block_decompress(src: bytes, dst_size: int) -> bytes:
-    """Decode one LZ4 *block* (not frame) of known decoded size."""
-    dst = bytearray(dst_size)
-    s, d, n = 0, 0, len(src)
-    while s < n:
-        token = src[s]
-        s += 1
-        # literals
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = src[s]
-                s += 1
-                lit += b
-                if b != 255:
-                    break
-        if lit:
-            if s + lit > n or d + lit > dst_size:
-                raise ValueError("LZ4 literal run overflows buffer")
-            dst[d : d + lit] = src[s : s + lit]
-            s += lit
-            d += lit
-        if s >= n:
-            break  # last sequence has no match
-        # match
-        off = src[s] | (src[s + 1] << 8)
-        s += 2
-        if off == 0 or off > d:
-            raise ValueError(f"LZ4 bad match offset {off} at dst {d}")
-        mlen = token & 0xF
-        if mlen == 15:
-            while True:
-                b = src[s]
-                s += 1
-                mlen += b
-                if b != 255:
-                    break
-        mlen += 4
-        if d + mlen > dst_size:
-            raise ValueError("LZ4 match overflows buffer")
-        if off >= mlen:
-            dst[d : d + mlen] = dst[d - off : d - off + mlen]
-            d += mlen
-        else:  # overlapping copy replicates byte-by-byte forward
-            for _ in range(mlen):
-                dst[d] = dst[d - off]
-                d += 1
-    if d != dst_size:
-        raise ValueError(f"LZ4 block decoded {d} bytes, expected {dst_size}")
-    return bytes(dst)
-
-
-def lz4_block_compress(src: bytes) -> bytes:
-    """Greedy hash-chain-free LZ4 block encoder (fixture writer).
-
-    Emits spec-valid streams: 4-byte hash-table matching, 12-byte
-    end-of-block match guard, final run all-literals.
-    """
-    n = len(src)
-    out = bytearray()
-    if n == 0:
-        return bytes(out)
-
-    def _emit(lit_start: int, lit_end: int, mlen: int, off: int) -> None:
-        lit = lit_end - lit_start
-        token_lit = 15 if lit >= 15 else lit
-        token_m = 0
-        if mlen:
-            token_m = 15 if mlen - 4 >= 15 else mlen - 4
-        out.append((token_lit << 4) | token_m)
-        rem = lit - 15
-        while token_lit == 15 and rem >= 0:
-            out.append(255 if rem >= 255 else rem)
-            if rem < 255:
-                break
-            rem -= 255
-        out.extend(src[lit_start:lit_end])
-        if mlen:
-            out.append(off & 0xFF)
-            out.append(off >> 8)
-            rem = (mlen - 4) - 15
-            while token_m == 15 and rem >= 0:
-                out.append(255 if rem >= 255 else rem)
-                if rem < 255:
-                    break
-                rem -= 255
-
-    table: dict[bytes, int] = {}
-    anchor = 0
-    i = 0
-    # matches may not reach into the last 5 bytes; last match must
-    # start >= 12 bytes from the end (LZ4 spec end conditions)
-    limit = n - 12
-    while i < limit:
-        key = src[i : i + 4]
-        j = table.get(key, -1)
-        table[key] = i
-        if j >= 0 and i - j <= 0xFFFF and src[j : j + 4] == key:
-            mlen = 4
-            maxm = (n - 5) - i
-            while mlen < maxm and src[j + mlen] == src[i + mlen]:
-                mlen += 1
-            _emit(anchor, i, mlen, i - j)
-            i += mlen
-            anchor = i
-        else:
-            i += 1
-    _emit(anchor, n, 0, 0)
-    return bytes(out)
-
-
-# -- blosc container ---------------------------------------------------
-
-
-def _split(codec: str, typesize: int, blocksize: int, leftover: bool) -> int:
+def _split(codec_id: int, typesize: int, blocksize: int, leftover: bool) -> int:
     if (
         not leftover
-        and codec in ("blosclz", "lz4")
+        and codec_id in _SPLIT_CODECS
         and 0 < typesize <= _MAX_SPLITS
         and blocksize // typesize >= _MIN_BUFFERSIZE
     ):
@@ -263,10 +150,10 @@ def blosc_decompress(raw: bytes) -> bytes:
             raise ValueError("blosc memcpy frame truncated")
         return raw[16 : 16 + nbytes]
     codec = _CODECS.get(flags >> 5)
-    if codec not in ("blosclz", "lz4", "zlib", "zstd", "snappy"):
+    if codec is None:
         raise NotImplementedError(
-            f"blosc codec {codec!r} needs a decoder not in this container "
-            "(supported: blosclz, lz4, zlib, zstd, snappy, memcpy)"
+            f"blosc codec id {flags >> 5} needs a decoder not in this "
+            f"container (supported: {', '.join(sorted(CNAMES))}, memcpy)"
         )
     if nbytes == 0:
         return b""
@@ -278,7 +165,7 @@ def blosc_decompress(raw: bytes) -> bytes:
     for b, start in enumerate(starts):
         bsize = min(blocksize, nbytes - b * blocksize)
         leftover = bsize != blocksize
-        nsplits = _split(codec, typesize, blocksize, leftover)
+        nsplits = _split(flags >> 5, typesize, blocksize, leftover)
         neblock = bsize // nsplits
         if nsplits > 1 and bsize % nsplits:
             raise ValueError("blosc split block size not divisible")
@@ -291,24 +178,8 @@ def blosc_decompress(raw: bytes) -> bytes:
             pos += csize
             if csize == neblock:  # stored raw
                 block += part
-            elif codec == "lz4":
-                block += lz4_block_decompress(part, neblock)
-            elif codec == "blosclz":
-                from bcdp_spark.sources.blosclz import (
-                    blosclz_decompress,
-                )
-
-                block += blosclz_decompress(part, neblock)
-            elif codec == "zstd":
-                from bcdp_spark.sources.zstd import zstd_decompress
-
-                block += zstd_decompress(part, neblock)
-            elif codec == "snappy":
-                from bcdp_spark.sources.snappy import snappy_decompress
-
-                block += snappy_decompress(part, neblock)
             else:
-                block += _zlib.decompress(part)
+                block += codecs.decode(codec, part, neblock)
         if len(block) != bsize:
             raise ValueError(
                 f"blosc block {b} decoded {len(block)} bytes, "
@@ -333,12 +204,13 @@ def blosc_compress(
 ) -> bytes:
     """Fixture/sink encoder producing frames c-blosc would accept.
     ``shuffle`` is True/'byte' (byte shuffle), 'bit' (bitshuffle), or
-    False/None. ``cname='zstd'`` segments are compressed with pyarrow's
-    bundled libzstd (a declared engine dependency) — the decode side is
-    our own from-scratch ``sources/zstd.py``."""
-    codec_id = {v: k for k, v in _CODECS.items()}.get(cname)
-    if cname not in ("blosclz", "lz4", "zlib", "zstd", "snappy"):
-        raise NotImplementedError(f"blosc_compress cname {cname!r}")
+    False/None. Segments are encoded through the codec table."""
+    codec_id = CNAMES.get(cname)
+    if codec_id is None:
+        raise NotImplementedError(
+            f"blosc_compress cname {cname!r} "
+            f"(supported: {', '.join(sorted(CNAMES))})"
+        )
     typesize = max(1, min(typesize, 255))
     nbytes = len(data)
     if blocksize <= 0:
@@ -372,29 +244,14 @@ def blosc_compress(
         elif flags & _SHUFFLE:
             block = _shuffle(block, typesize)
         leftover = bsize != blocksize
-        nsplits = _split(cname, typesize, blocksize, leftover)
+        nsplits = _split(codec_id, typesize, blocksize, leftover)
         if nsplits > 1 and bsize % nsplits:
             nsplits = 1
         neblock = bsize // nsplits
         parts = []
         for s in range(nsplits):
             seg = block[s * neblock : (s + 1) * neblock]
-            if cname == "lz4":
-                comp = lz4_block_compress(seg)
-            elif cname == "blosclz":
-                from bcdp_spark.sources.blosclz import blosclz_compress
-
-                comp = blosclz_compress(seg)
-            elif cname == "zstd":
-                import pyarrow as _pa
-
-                comp = bytes(_pa.Codec("zstd").compress(seg))
-            elif cname == "snappy":
-                from bcdp_spark.sources.snappy import snappy_compress
-
-                comp = snappy_compress(seg)
-            else:
-                comp = _zlib.compress(seg)
+            comp = codecs.encode(_CODECS[codec_id], seg)
             if len(comp) >= neblock:  # incompressible: store raw
                 comp = seg
             parts.append(struct.pack("<i", len(comp)) + comp)

@@ -29,8 +29,9 @@ READ (``H5File``):
 - filter pipeline v1/v2: deflate (id 1), shuffle (id 2), fletcher32
   (id 3, checksum stripped), n-bit (id 5) and scale-offset (id 6 —
   netCDF ``significant_digits``; both in `sources/h5filters.py`),
-  LZF (id 32000, h5py's bundled filter — `sources/lzf.py`), zstd
-  (id 32015); anything else raises with the filter id
+  LZF (id 32000, h5py's bundled filter), zstd (id 32015); deflate,
+  LZF and zstd decode through the codec table (`sources/codecs.py`);
+  anything else raises with the filter id
 
 WRITE (``write_hdf5``): deterministic fixture generator with two
 profiles so tests exercise both reader generations —
@@ -49,10 +50,11 @@ from __future__ import annotations
 
 import itertools
 import struct
-import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from bcdp_spark.sources import codecs
 
 
 def _up(fmt: str, buf, off: int = 0) -> tuple:
@@ -144,6 +146,11 @@ def _fletcher32(data: bytes) -> int:
     return (s2 << 16) | s1
 
 
+# HDF5 filter id -> codec-table name: deflate, h5py's LZF plugin, and
+# the zstd plugin
+_H5_CODECS = {1: "zlib", 32000: "lzf", 32015: "zstd"}
+
+
 def defilter_chunk(
     raw: bytes,
     filters: list,
@@ -165,7 +172,7 @@ def defilter_chunk(
         if fmask & (1 << i):
             continue  # filter skipped for this chunk
         if fid == 1:
-            raw = zlib.decompress(raw)
+            raw = codecs.decode(_H5_CODECS[fid], raw)
         elif fid == 2:
             esz = cvals[0] if cvals else dt.itemsize
             a = np.frombuffer(raw, dtype=np.uint8)
@@ -197,14 +204,7 @@ def defilter_chunk(
             ) * dt.itemsize + 4 * sum(
                 1 for f in filters[:i] if f[0] == 3
             )
-            if fid == 32000:
-                from bcdp_spark.sources.lzf import lzf_decompress
-
-                raw = lzf_decompress(raw, expect)
-            else:
-                from bcdp_spark.sources.zstd import zstd_decompress
-
-                raw = zstd_decompress(raw, expect)
+            raw = codecs.decode(_H5_CODECS[fid], raw, expect)
         elif fid == 6:  # scale-offset (netCDF significant_digits)
             from bcdp_spark.sources.h5filters import scaleoffset_decode
 
@@ -3002,20 +3002,14 @@ def write_hdf5(
                         )
 
                         raw = szip_encode(raw, cv)
-                    elif fid == 1:
-                        raw = zlib.compress(raw, cv[0])
+                    elif fid in _H5_CODECS:
+                        raw = codecs.encode(
+                            _H5_CODECS[fid], raw, cv[0] if fid == 1 else None
+                        )
                     elif fid == 3:
                         raw = raw + struct.pack(
                             "<I", _fletcher32(raw)
                         )
-                    elif fid == 32000:
-                        from bcdp_spark.sources.lzf import lzf_compress
-
-                        raw = lzf_compress(raw)
-                    elif fid == 32015:
-                        import pyarrow as _pa
-
-                        raw = bytes(_pa.Codec("zstd").compress(raw))
                 chunk_blobs.append((idx, raw))
             rank = arr.ndim
             if itype is not None:

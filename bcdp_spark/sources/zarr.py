@@ -5,8 +5,10 @@ climate format the reference's xarray stack reads via ``open_zarr``
 Implements the PUBLIC Zarr v2 storage spec from scratch — a store is a
 directory tree where each array holds a ``.zarray`` JSON (shape, chunks,
 dtype, compressor, fill_value, order) plus chunk files named by
-dot-separated grid indices — with NO third-party codec: ``null``,
-``zlib``/``gzip``/``lzma`` compressors decode with the stdlib. Coordinate
+dot-separated grid indices. Compressors are looked up by name in the
+codec table (``sources/codecs.py``); this module keeps only the
+container framing (blosc frames, numcodecs-LZ4's size prefix, the
+kerchunk pseudo-codecs). Coordinate
 arrays follow the xarray convention (``_ARRAY_DIMENSIONS`` in
 ``.zattrs``); CF time units/calendars decode through
 ``bcdp_spark.sources.cfcal`` exactly like the NetCDF path.
@@ -28,13 +30,11 @@ from __future__ import annotations
 import ast
 import functools
 import math
-import gzip as _gzip
 import itertools
 import json
 import os
 import re
 import struct
-import zlib as _zlib
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
+from bcdp_spark.sources import codecs
+from bcdp_spark.sources.blosc import CNAMES as _BLOSC_CNAMES
 from bcdp_spark.sources.netcdf import (
     LONG_FORM_SCHEMA,
     LONG_FORM_SCHEMA_4D,
@@ -51,12 +53,10 @@ from bcdp_spark.sources.netcdf import (
 )
 from bcdp_spark.sources.registry import register_data_source
 
-_SUPPORTED_COMPRESSORS = (None, "zlib", "gzip", "blosc", "zstd", "lzma",
-                          "bz2", "lz4", "grib2", "hdf5-filter")
-# blosc inner codecs we can decode (zarr-python's v2 DEFAULT is
-# Blosc(cname='lz4')); blosclz landed r8 (sources/blosclz.py)
-_SUPPORTED_BLOSC_CNAMES = (
-    "blosclz", "lz4", "lz4hc", "zlib", "zstd", "snappy"
+# v2 compressor ids: any codec-table name, blosc frames (zarr-python's
+# v2 DEFAULT is Blosc(cname='lz4')), and the kerchunk pseudo-codecs
+_SUPPORTED_COMPRESSORS = sorted(
+    {*codecs.CODECS, "blosc", "grib2", "hdf5-filter"}
 )
 # v2 numcodecs filters with a from-scratch decode below
 _SUPPORTED_FILTERS = ("delta", "shuffle", "fixedscaleoffset", "quantize")
@@ -616,11 +616,11 @@ def _v3_meta(doc: dict, name: str) -> ZArrayMeta:
                 ) == "little" else ">"
         return "<"
 
-    codecs = list(doc.get("codecs", []))
+    chain = list(doc.get("codecs", []))
     shard_chunk = None
     shard_codecs: list = []
     shard_loc, shard_crc = "end", False
-    for c in codecs:
+    for c in chain:
         if c.get("name") == "sharding_indexed":
             cfg = c["configuration"]
             shard_chunk = tuple(cfg["chunk_shape"])
@@ -630,15 +630,15 @@ def _v3_meta(doc: dict, name: str) -> ZArrayMeta:
                 ic.get("name") == "crc32c"
                 for ic in cfg.get("index_codecs", [])
             )
-            codecs = shard_codecs  # endianness of the actual data
+            chain = shard_codecs  # endianness of the actual data
             break
     transpose_order = None
-    for c in codecs:
+    for c in chain:
         if c.get("name") == "transpose":
             transpose_order = tuple(c["configuration"]["order"])
         elif c.get("name") == "blosc":
             cfg = c.get("configuration", {})
-            if cfg.get("cname", "lz4") not in _SUPPORTED_BLOSC_CNAMES:
+            if cfg.get("cname", "lz4") not in _BLOSC_CNAMES:
                 raise NotImplementedError(
                     f"{name}: v3 blosc cname {cfg.get('cname')!r}"
                 )
@@ -646,15 +646,15 @@ def _v3_meta(doc: dict, name: str) -> ZArrayMeta:
             # zarr-python 3's numcodecs.zarr3 wrappers: a v2 codec
             # carried under a v3 name, configuration = the v2 config
             sub = c["name"].split(".", 1)[1]
-            if sub not in _NC_V3_BB | _NC_V3_ARR:
+            if sub not in _NC_BB and sub not in _NC_V3_ARR:
                 raise NotImplementedError(
-                    f"{name}: v3 codec {c['name']!r} (wrapped v2 "
-                    f"codecs supported: {sorted(_NC_V3_BB | _NC_V3_ARR)})"
+                    f"{name}: v3 codec {c['name']!r} (wrapped v2 codecs "
+                    f"supported: {sorted({*_NC_BB, *_NC_V3_ARR})})"
                 )
             # (r9: wrappers decode inside sharding_indexed too — the
             # inner chain routes through the same _bb_decode /
             # _filters_decode pair as unsharded arrays)
-        elif c.get("name") not in ("bytes", "gzip", "zstd", "crc32c"):
+        elif c.get("name") not in {"bytes", "crc32c", *_NC_BB}:
             raise NotImplementedError(f"{name}: v3 codec {c.get('name')!r}")
     attrs = dict(doc.get("attributes", {}))
     if "dimension_names" in doc and "_ARRAY_DIMENSIONS" not in attrs:
@@ -662,7 +662,7 @@ def _v3_meta(doc: dict, name: str) -> ZArrayMeta:
     return ZArrayMeta(
         shape=tuple(doc["shape"]),
         chunks=chunks,
-        dtype=np.dtype(_endian(codecs) + base),
+        dtype=np.dtype(_endian(chain) + base),
         order="C",
         fill_value=doc.get("fill_value", 0),
         compressor=None,
@@ -711,15 +711,15 @@ def read_array_meta(
     if comp is not None and comp.get("id") not in _SUPPORTED_COMPRESSORS:
         raise NotImplementedError(
             f"{name}: compressor {comp.get('id')!r} needs a codec not in "
-            "this container (supported: null, zlib, gzip, blosc, zstd, "
-            "lzma, bz2, lz4)"
+            f"this container (supported: null, "
+            f"{', '.join(_SUPPORTED_COMPRESSORS)})"
         )
     if comp is not None and comp.get("id") == "blosc":
         cname = comp.get("cname", "blosclz")
-        if cname not in _SUPPORTED_BLOSC_CNAMES:
+        if cname not in _BLOSC_CNAMES:
             raise NotImplementedError(
                 f"{name}: blosc cname {cname!r} needs a codec not in "
-                f"this container (supported: {_SUPPORTED_BLOSC_CNAMES})"
+                f"this container (supported: {sorted(_BLOSC_CNAMES)})"
             )
     if consolidated is not None and f"{name}/.zattrs" in consolidated:
         attrs = consolidated[f"{name}/.zattrs"]
@@ -746,66 +746,58 @@ def _chunk_path(store: str, name: str, idx: tuple[int, ...], meta: ZArrayMeta) -
     return _join(store, name, key)
 
 
-# wrapped-v2 codec names zarr-python 3 emits (numcodecs.zarr3):
-# bytes→bytes compressors and the size-preserving array→array filters
-_NC_V3_BB = {"zlib", "gzip", "bz2", "lzma", "lz4", "zstd", "blosc"}
+# array→array numcodecs filters zarr-python 3 also wraps (numcodecs.zarr3)
 _NC_V3_ARR = {"delta", "shuffle", "fixedscaleoffset", "quantize"}
+# wrapped bytes→bytes codecs: the codec table plus blosc frames
+_NC_BB = {*codecs.CODECS, "blosc"}
 
 
-def _nc_bb_decode(raw: bytes, sub: str, cfg: dict, expect: int | None) -> bytes:
-    """Decode one wrapped bytes→bytes v2 codec (the same decoders the
-    v2 compressor path uses — stdlib zlib/gzip/bz2/lzma are themselves
-    independent producers for the write-side twins)."""
-    if sub == "zlib":
-        return _zlib.decompress(raw)
-    if sub == "gzip":
-        return _gzip.decompress(raw)
-    if sub == "bz2":
-        import bz2 as _bz2
+def _lz4_unframe(raw: bytes) -> bytes:
+    """numcodecs.LZ4 framing (v2 compressor and v3 wrapper alike): a LE
+    uint32 decoded size, then one raw LZ4 block."""
+    if len(raw) < 4:
+        raise ValueError("lz4: chunk shorter than its 4-byte size prefix")
+    (plain,) = struct.unpack_from("<I", raw, 0)
+    return codecs.decode("lz4", raw[4:], plain)
 
-        return _bz2.decompress(raw)
-    if sub == "lzma":
-        import lzma as _lzma
 
-        fmt = int(cfg.get("format", _lzma.FORMAT_XZ))
-        if fmt == _lzma.FORMAT_RAW:
-            return _lzma.decompress(
-                raw, format=fmt, filters=cfg.get("filters")
-            )
-        return _lzma.decompress(raw)
-    if sub == "lz4":
-        from bcdp_spark.sources.blosc import lz4_block_decompress
-
-        (plain,) = struct.unpack_from("<I", raw, 0)
-        return lz4_block_decompress(raw[4:], plain)
-    if sub == "zstd":
-        from bcdp_spark.sources.zstd import zstd_decompress
-
-        return zstd_decompress(raw, expect)
-    if sub == "blosc":
+def _decode_bytes(name: str, raw: bytes, cfg: dict, size: int | None) -> bytes:
+    """One bytes→bytes compressor by Zarr name: blosc frames and the
+    numcodecs-LZ4 prefix are unwrapped here, every other name is a
+    codec-table lookup. ``size`` is the decoded byte count when known."""
+    if name == "blosc":
         from bcdp_spark.sources.blosc import blosc_decompress
 
         return blosc_decompress(raw)
-    raise NotImplementedError(f"numcodecs.{sub}")
+    if name == "lz4":
+        return _lz4_unframe(raw)
+    return codecs.decode(name, raw, size, cfg)
 
 
-def _bb_decode(raw: bytes, chain: list, expect: int | None = None) -> bytes:
-    """v3 bytes→bytes codecs applied in reverse (gzip, crc32c strip).
-    ``expect`` (the plain chunk byte count) routes zstd through the
-    libzstd hot path."""
-    for c in reversed(chain):
-        n = c.get("name")
-        if n == "gzip":
-            raw = _gzip.decompress(raw)
-        elif n == "zstd":
-            from bcdp_spark.sources.zstd import zstd_decompress
+def _bb_name(c: dict) -> str | None:
+    """The bytes→bytes codec a v3 chain entry names (numcodecs wrappers
+    unwrapped; ``crc32c`` kept), or None for array-side entries."""
+    n = str(c.get("name", ""))
+    if n == "crc32c":
+        return n
+    sub = n.removeprefix("numcodecs.")
+    return sub if sub in _NC_BB else None
 
-            raw = zstd_decompress(raw, expect)
-        elif n == "blosc":
-            from bcdp_spark.sources.blosc import blosc_decompress
 
-            raw = blosc_decompress(raw)
-        elif n == "crc32c":
+def _bb_decode(raw: bytes, chain: list, size: int | None = None) -> bytes:
+    """v3 bytes→bytes codecs applied in reverse (compressors, crc32c
+    strip). ``size`` is the plain chunk byte count; the innermost
+    compressor decodes to it plus any crc32c suffixes applied before
+    it on write."""
+    names = [_bb_name(c) for c in chain]
+    inner = next(
+        (k for k, n in enumerate(names) if n not in (None, "crc32c")), None
+    )
+    if size is not None and inner is not None:
+        size += 4 * names[:inner].count("crc32c")
+    for k in reversed(range(len(chain))):
+        n = names[k]
+        if n == "crc32c":
             # verify-and-strip (little-endian suffix per the v3 spec):
             # a corrupted chunk fails loudly, never decodes as data
             from bcdp_spark.sources.crc32c import crc32c as _crc
@@ -818,16 +810,36 @@ def _bb_decode(raw: bytes, chain: list, expect: int | None = None) -> bytes:
                     f"computed 0x{calc:08x} (corrupt chunk)"
                 )
             raw = raw[:-4]
-        elif n and str(n).startswith("numcodecs."):
-            sub = str(n).split(".", 1)[1]
-            if sub in _NC_V3_BB:
-                raw = _nc_bb_decode(
-                    raw, sub, c.get("configuration", {}), expect
-                )
-            # array-side wrappers apply after the bytes boundary
-            # (decode_chunk_bytes routes them through _filters_decode)
-        # "bytes" handled by the dtype's endianness
+        elif n is not None:
+            raw = _decode_bytes(
+                n, raw, chain[k].get("configuration", {}),
+                size if k == inner else None,
+            )
+        # "bytes" is the dtype's endianness; array-side numcodecs
+        # wrappers apply after the bytes boundary (_filters_decode)
     return raw
+
+
+def _nc_filters(chain: list) -> list:
+    """The array-side numcodecs wrappers of a v3 chain, as v2 filter
+    dicts for :func:`_filters_decode`."""
+    return [
+        {"id": c["name"].split(".", 1)[1], **c.get("configuration", {})}
+        for c in chain
+        if str(c.get("name", "")).startswith("numcodecs.")
+        and c["name"].split(".", 1)[1] in _NC_V3_ARR
+    ]
+
+
+def _payload_nbytes(n: int, filters: list, dtype: np.dtype) -> int:
+    """Bytes the compressor sees for an n-element chunk: the last typed
+    filter of the encode chain sets the stored item size (shuffle keeps
+    it)."""
+    itemsize = dtype.itemsize
+    for f in filters:
+        if f["id"] != "shuffle":
+            itemsize = np.dtype(f.get("astype") or f["dtype"]).itemsize
+    return n * itemsize
 
 
 def _filters_decode(raw: bytes, filters: list, dtype: np.dtype) -> bytes:
@@ -880,19 +892,13 @@ def decode_chunk_bytes(raw: bytes, meta: ZArrayMeta) -> np.ndarray:
     if meta.v3:
         if meta.shard_chunk is not None:
             return _decode_shard(raw, meta)
+        nc_filters = _nc_filters(meta.codecs)
         raw = _bb_decode(
             raw, meta.codecs,
-            int(np.prod(meta.chunks)) * meta.dtype.itemsize,
+            _payload_nbytes(
+                int(np.prod(meta.chunks)), nc_filters, meta.dtype
+            ),
         )
-        nc_filters = [
-            {
-                "id": c["name"].split(".", 1)[1],
-                **c.get("configuration", {}),
-            }
-            for c in meta.codecs
-            if str(c.get("name", "")).startswith("numcodecs.")
-            and c["name"].split(".", 1)[1] in _NC_V3_ARR
-        ]
         if nc_filters:
             raw = _filters_decode(raw, nc_filters, meta.dtype)
         arr = np.frombuffer(raw, dtype=meta.dtype)
@@ -930,48 +936,13 @@ def decode_chunk_bytes(raw: bytes, meta: ZArrayMeta) -> np.ndarray:
             raw = defilter_chunk(
                 bytes(raw), pipeline, meta.dtype, meta.chunks
             )
-        elif cid == "gzip":
-            raw = _gzip.decompress(raw)
-        elif cid == "blosc":
-            from bcdp_spark.sources.blosc import blosc_decompress
-
-            raw = blosc_decompress(raw)
-        elif cid == "zstd":
-            from bcdp_spark.sources.zstd import zstd_decompress
-
-            raw = zstd_decompress(
-                raw, int(np.prod(meta.chunks)) * meta.dtype.itemsize
-            )
-        elif cid == "bz2":
-            import bz2 as _bz2
-
-            raw = _bz2.decompress(raw)
-        elif cid == "lz4":
-            # numcodecs.LZ4 framing: LE uint32 plain size + one LZ4
-            # block — decoded by our own block decoder (certified by
-            # pyarrow's lz4_raw producer in tests)
-            from bcdp_spark.sources.blosc import lz4_block_decompress
-
-            (plain,) = struct.unpack_from("<I", raw, 0)
-            raw = lz4_block_decompress(raw[4:], plain)
-        elif cid == "lzma":
-            # numcodecs.LZMA stores lzma.compress() output verbatim
-            # (format/check/preset/filters are encoder-side knobs; the
-            # xz/alone/raw container self-describes except FORMAT_RAW,
-            # which needs the filter chain from the metadata)
-            import lzma as _lzma
-
-            fmt = int(meta.compressor.get("format", _lzma.FORMAT_XZ))
-            if fmt == _lzma.FORMAT_RAW:
-                raw = _lzma.decompress(
-                    raw,
-                    format=fmt,
-                    filters=meta.compressor.get("filters"),
-                )
-            else:
-                raw = _lzma.decompress(raw)
         else:
-            raw = _zlib.decompress(raw)
+            raw = _decode_bytes(
+                cid, raw, meta.compressor,
+                _payload_nbytes(
+                    int(np.prod(meta.chunks)), meta.filters, meta.dtype
+                ),
+            )
     if meta.filters:
         raw = _filters_decode(raw, meta.filters, meta.dtype)
     arr = np.frombuffer(raw, dtype=meta.dtype)
@@ -1022,12 +993,7 @@ def _decode_shard_from(pread, total: int, meta: ZArrayMeta) -> np.ndarray:
     # array-side numcodecs wrappers on the INNER codec chain (r9 —
     # zarr-python 3 writes v2 array codecs inside shards too); the
     # byte-side wrappers already route through _bb_decode below
-    nc_filters = [
-        {"id": c["name"].split(".", 1)[1], **c.get("configuration", {})}
-        for c in meta.shard_codecs
-        if str(c.get("name", "")).startswith("numcodecs.")
-        and c["name"].split(".", 1)[1] in _NC_V3_ARR
-    ]
+    nc_filters = _nc_filters(meta.shard_codecs)
     idxs = [()]
     for g in grid:
         idxs = [t + (j,) for t in idxs for j in range(g)]
@@ -1037,7 +1003,7 @@ def _decode_shard_from(pread, total: int, meta: ZArrayMeta) -> np.ndarray:
             continue
         blob = _bb_decode(
             pread(int(off), int(nb)), meta.shard_codecs,
-            int(np.prod(inner)) * meta.dtype.itemsize,
+            _payload_nbytes(int(np.prod(inner)), nc_filters, meta.dtype),
         )
         if nc_filters:
             blob = _filters_decode(blob, nc_filters, meta.dtype)
@@ -1411,6 +1377,28 @@ def _filters_encode(arr: np.ndarray, filters: list) -> bytes:
     return arr.tobytes()
 
 
+def _encode_bytes(compressor: dict, raw: bytes, typesize: int) -> bytes:
+    """Write-side twin of :func:`_decode_bytes` for a v2 compressor."""
+    cid = compressor["id"]
+    if cid == "blosc":
+        from bcdp_spark.sources.blosc import blosc_compress
+
+        return blosc_compress(
+            raw,
+            typesize=typesize,
+            cname=compressor.get("cname", "lz4"),
+            shuffle={0: False, 1: "byte", 2: "bit"}[
+                int(compressor.get("shuffle", 1))
+            ],
+            blocksize=int(compressor.get("blocksize", 0)),
+        )
+    if cid == "lz4":
+        return struct.pack("<I", len(raw)) + codecs.encode("lz4", raw)
+    return codecs.encode(
+        cid, raw, compressor.get("preset" if cid == "lzma" else "level")
+    )
+
+
 def write_zarr(
     store: str,
     dims: dict[str, int],
@@ -1475,46 +1463,7 @@ def write_zarr(
                 else block.tobytes(order="C")
             )
             if compressor:
-                if compressor["id"] == "gzip":
-                    raw = _gzip.compress(
-                        raw, compresslevel=compressor.get("level", 1)
-                    )
-                elif compressor["id"] == "blosc":
-                    from bcdp_spark.sources.blosc import blosc_compress
-
-                    raw = blosc_compress(
-                        raw,
-                        typesize=arr.dtype.itemsize,
-                        cname=compressor.get("cname", "lz4"),
-                        shuffle={0: False, 1: "byte", 2: "bit"}[
-                            int(compressor.get("shuffle", 1))
-                        ],
-                        blocksize=int(compressor.get("blocksize", 0)),
-                    )
-                elif compressor["id"] == "zstd":
-                    import pyarrow as _pa
-
-                    raw = bytes(_pa.Codec("zstd").compress(raw))
-                elif compressor["id"] == "bz2":
-                    import bz2 as _bz2
-
-                    raw = _bz2.compress(
-                        raw, compresslevel=compressor.get("level", 9)
-                    )
-                elif compressor["id"] == "lz4":
-                    import pyarrow as _pa
-
-                    raw = struct.pack("<I", len(raw)) + bytes(
-                        _pa.Codec("lz4_raw").compress(raw)
-                    )
-                elif compressor["id"] == "lzma":
-                    import lzma as _lzma
-
-                    raw = _lzma.compress(
-                        raw, preset=compressor.get("preset")
-                    )
-                else:
-                    raw = _zlib.compress(raw, compressor.get("level", 1))
+                raw = _encode_bytes(compressor, raw, arr.dtype.itemsize)
             with open(
                 os.path.join(adir, ".".join(str(i) for i in idx)), "wb"
             ) as fh:
@@ -1544,8 +1493,7 @@ def write_zarr_v3(
     codec — ``chunks`` is then the OUTER shard shape and ``shards`` the
     inner chunk shape, with an end-located u64-pair index. Codec chain:
     bytes(little) [+ gzip or zstd — ``codec='zstd'`` is zarr-python
-    v3's DEFAULT chain; encoded via pyarrow's bundled libzstd, decoded
-    by our own ``sources/zstd.py``]. ``key_encoding``: 'default'
+    v3's DEFAULT chain]. ``key_encoding``: 'default'
     (c/0/1) or 'v2' (dot-separated). ``crc=True`` appends the crc32c
     codec to the chunk chain AND the shard-index codec list — readers
     (ours included, r6) verify both."""
@@ -1555,12 +1503,9 @@ def write_zarr_v3(
 
     def _bb(raw: bytes) -> bytes:
         if gzip_level is not None:
-            if codec == "zstd":
-                import pyarrow as _pa
-
-                raw = bytes(_pa.Codec("zstd").compress(raw))
-            else:
-                raw = _gzip.compress(raw, compresslevel=gzip_level)
+            raw = codecs.encode(
+                codec, raw, None if codec == "zstd" else gzip_level
+            )
         if crc:
             from bcdp_spark.sources.crc32c import crc32c as _crc
 
@@ -1585,9 +1530,9 @@ def write_zarr_v3(
         base = {v: k for k, v in _V3_DTYPES.items()}[
             arr.dtype.str.lstrip("<>=|")
         ]
-        codecs: list = list(inner_codecs)
+        chain: list = list(inner_codecs)
         if vinner is not None:
-            codecs = [
+            chain = [
                 {
                     "name": "sharding_indexed",
                     "configuration": {
@@ -1621,7 +1566,7 @@ def write_zarr_v3(
                 else {"name": "v2", "configuration": {"separator": "."}}
             ),
             "fill_value": 0,
-            "codecs": codecs,
+            "codecs": chain,
             "attributes": dict(attrs),
             "dimension_names": list(vdims),
         }

@@ -1,14 +1,13 @@
-"""Zstandard DECODER, from scratch per RFC 8878 (the public Zstandard
-format spec) — no libzstd binding involved. No reference-repo code
-[/root/reference is empty — SURVEY.md §0].
+"""Zstandard decoder in pure Python, per RFC 8878 (the public
+Zstandard format spec), plus the xxh64 hash its content checksums use.
 
 Why it exists: zstd is the DEFAULT codec of Zarr v3 stores
 (``bytes`` → ``zstd`` chain), a common numcodecs v2 compressor, the
-blosc ``cname='zstd'`` inner codec, and HDF5 filter 32015 — i.e. the
-single most common compression a user's real store will hand this
-engine. Decode-only: the engine's own sinks write codecs we also
-encode (null/zlib/gzip/blosc-lz4); reading foreign data is what needs
-zstd.
+blosc ``cname='zstd'`` inner codec, and HDF5 filter 32015. The codec
+table (``sources/codecs.py``) decodes zstd through pyarrow's bundled
+libzstd when the decoded size is known and falls back to this decoder
+when it is not, or when libzstd rejects the payload (concatenated or
+skippable frames); encoding is libzstd's.
 
 Correctness strategy: the test suite certifies this decoder against
 REAL frames produced by pyarrow's bundled libzstd encoder (levels 1 to
@@ -554,31 +553,6 @@ def _decode_block(block: bytes, out: bytearray, st: _FrameState,
     if bits.pos != 0:
         raise ValueError("zstd: sequence bitstream not fully consumed")
     out += lits[lit_pos:]
-
-
-def zstd_decompress(data: bytes, expected_size: int | None = None,
-                    verify_checksum: bool = True) -> bytes:
-    """Decode zstd data. When the caller knows the decompressed size
-    (every chunk consumer does), the hot path is pyarrow's bundled
-    libzstd (C speed; pyarrow is a hard engine dependency); the pure
-    decoder below is the authoritative spec implementation — it runs
-    when pyarrow is absent or rejects input libzstd one-shot decode
-    can't take (concatenated/skippable frames), and the test suite
-    certifies it against libzstd output directly."""
-    if expected_size is not None:
-        try:
-            import pyarrow as _pa
-
-            return bytes(
-                _pa.Codec("zstd").decompress(data, expected_size)
-            )
-        except ImportError:
-            pass
-        except Exception:
-            # not one plain frame (concat/skippable) — the pure
-            # decoder below either handles it or raises the real error
-            pass
-    return zstd_decompress_pure(data, expected_size, verify_checksum)
 
 
 def zstd_decompress_pure(data: bytes, expected_size: int | None = None,

@@ -217,6 +217,24 @@ def sf10_leg_child(key: str) -> dict:
     }
 
 
+_LEG_KEYS = ("min", "median", "stage_reuse")
+
+
+def _sf10_leg(stdout: str) -> dict | None:
+    """The first JSON object line of a ``--sf10-leg`` child's stdout
+    that carries every result key; None when there is none. Lines are
+    parsed, not prefix-matched, so key order and log noise don't
+    matter."""
+    for ln in stdout.splitlines():
+        try:
+            leg = json.loads(ln)
+        except ValueError:
+            continue
+        if isinstance(leg, dict) and all(k in leg for k in _LEG_KEYS):
+            return leg
+    return None
+
+
 def duckdb_suite(sf_dir: str, keys=HEADLINE,
                  cached_tables=CACHED_TABLES, runs: int = 15,
                  ) -> dict[str, float]:
@@ -344,14 +362,17 @@ def main() -> None:
                     capture_output=True, text=True, timeout=3600,
                     cwd=os.path.dirname(os.path.abspath(__file__)),
                 )
-                for ln in child.stdout.splitlines():
-                    if ln.startswith('{"min"'):
-                        leg = json.loads(ln)
-                        break
+                leg = _sf10_leg(child.stdout)
             except Exception:
                 leg = None
             if leg is None:
                 protocol = "in_process_fallback"
+                print(
+                    f"bench: sf10 child for {key} gave no result line; "
+                    "measuring in process (the median is not a "
+                    "fresh-plan median)",
+                    file=sys.stderr,
+                )
                 f, fe = fresh_suite(spark, sf10_dir, keys=(key,), runs=5)
                 t10, m10, c10 = run_suite(
                     spark, sf10_dir, keys=(key,), cached_tables=(), runs=5,

@@ -1,7 +1,9 @@
-"""Blosc v1 container + LZ4 block codec (sources/blosc.py): byte-level
-roundtrips, hand-checked LZ4 vectors, split/shuffle/memcpy paths, loud
-seams, and the zarr v2 scan path over a blosc-framed store —
-zarr-python's DEFAULT v2 compressor layout."""
+"""Blosc v1 container (sources/blosc.py) + the raw LZ4 block codec it
+reads through the codec table (sources/codecs.py): byte-level
+roundtrips, hand-checked LZ4 vectors, blocks written by the earlier
+pure-Python encoder, split/shuffle/memcpy paths, loud seams, and the
+zarr v2 scan path over a blosc-framed store — zarr-python's DEFAULT v2
+compressor layout."""
 
 from __future__ import annotations
 
@@ -12,12 +14,12 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bcdp_spark.sources.blosc import (
-    blosc_compress,
-    blosc_decompress,
-    lz4_block_compress,
-    lz4_block_decompress,
-)
+from bcdp_spark.sources import codecs
+from bcdp_spark.sources.blosc import blosc_compress, blosc_decompress
+
+
+def _lz4(src: bytes, n: int) -> bytes:
+    return codecs.decode("lz4", src, n)
 
 
 # -- LZ4 block ---------------------------------------------------------
@@ -25,31 +27,85 @@ from bcdp_spark.sources.blosc import (
 
 def test_lz4_hand_vector_literals_only():
     # token 0x50: 5 literals, no match (final sequence)
-    assert lz4_block_decompress(b"\x50hello", 5) == b"hello"
+    assert _lz4(b"\x50hello", 5) == b"hello"
 
 
 def test_lz4_hand_vector_with_match():
-    # 4 literals "abcd", match offset 4 len 4+0 → "abcdabcd", then
-    # final literal run "Z"
-    src = b"\x40abcd\x04\x00" + b"\x10Z"
-    assert lz4_block_decompress(src, 9) == b"abcdabcdZ"
+    # 4 literals "abcd", match offset 4 len 4+0 → "abcdabcd", then a
+    # final literal run of 8 (LZ4's end rules: the last match starts
+    # >= 12 bytes before the end, the last 5 bytes are literals)
+    src = b"\x40abcd\x04\x00" + b"\x80Zyxwvuts"
+    assert _lz4(src, 16) == b"abcdabcdZyxwvuts"
 
 
 def test_lz4_overlapping_match_rle():
-    # 1 literal "a", match offset 1 len 4+3=7 → RLE of "a" ×8
-    src = b"\x13a\x01\x00" + b"\x10b"
-    assert lz4_block_decompress(src, 9) == b"aaaaaaaab"
+    # 1 literal "a", match offset 1 len 4+3=7 → RLE of "a" ×8, then a
+    # final 5-literal run
+    src = b"\x13a\x01\x00" + b"\x50bcdef"
+    assert _lz4(src, 13) == b"aaaaaaaabcdef"
 
 
 def test_lz4_long_lengths_extension_bytes():
     data = bytes(range(256)) * 3  # 768 incompressible-ish literals
-    comp = lz4_block_compress(data)
-    assert lz4_block_decompress(comp, len(data)) == data
+    comp = codecs.encode("lz4", data)
+    assert _lz4(comp, len(data)) == data
 
 
 def test_lz4_bad_offset_raises():
-    with pytest.raises(ValueError, match="offset"):
-        lz4_block_decompress(b"\x10a\x05\x00", 6)
+    with pytest.raises(ValueError, match="lz4"):
+        _lz4(b"\x10a\x05\x00", 6)
+
+
+def test_lz4_short_block_raises():
+    # pyarrow hands back a buffer of the requested capacity whatever
+    # the block decoded to; a block that decodes to fewer bytes than
+    # its container declares must fail, not return an uninitialised tail
+    comp = codecs.encode("lz4", b"hello world, hello lz4")
+    with pytest.raises(ValueError, match="lz4"):
+        _lz4(comp, 23)
+    with pytest.raises(ValueError, match="lz4"):
+        _lz4(comp, 21)  # and one that overruns its capacity
+    with pytest.raises(ValueError, match="lz4"):
+        _lz4(comp[:-3], 22)  # truncated
+
+
+def test_lz4_empty_block():
+    assert _lz4(b"", 0) == b""
+    assert _lz4(codecs.encode("lz4", b""), 0) == b""
+    with pytest.raises(ValueError, match="lz4"):
+        _lz4(b"\x50hello", 0)
+
+
+# blocks written by the pure-Python LZ4 encoder earlier versions of this
+# package used for blosc-lz4 frames; stores written with it exist on
+# disk, so the table's decoder must keep reading them
+_OLD_LZ4_BLOCKS = [
+    (b"hello", "5068656c6c6f"),
+    (b"spark-graft " * 8, "cf737061726b2d6772616674200c003c507261667420"),
+    (b"a" * 40 + b"0123456789abcdef",
+     "1f61010014f00130313233343536373839616263646566"),
+    (bytes(range(64)) * 3 + b"tail-literals",
+     "ff31" + bytes(range(64)).hex() + "40006dd0" + b"tail-literals".hex()),
+]
+
+
+@pytest.mark.parametrize("plain,block", _OLD_LZ4_BLOCKS)
+def test_lz4_reads_blocks_from_earlier_encoder(plain, block):
+    assert _lz4(bytes.fromhex(block), len(plain)) == plain
+
+
+_OLD_BLOSC_LZ4_FRAME = (
+    "0201210400040000000400005600000014000000110000007f0001020304050607"
+    "00e15006000102030b0000001f000100e75000000000000b0000001f000100e750"
+    "00000000000b0000001f000100e7500000000000"
+)
+
+
+def test_blosc_lz4_reads_frame_from_earlier_encoder():
+    # byte shuffle + 4 splits, written by the earlier pure-Python encoder
+    frame = bytes.fromhex(_OLD_BLOSC_LZ4_FRAME)
+    data = (np.arange(256, dtype="<i4") % 7).tobytes()
+    assert blosc_decompress(frame) == data
 
 
 @settings(max_examples=40, deadline=None)
@@ -65,13 +121,13 @@ def test_lz4_bad_offset_raises():
     )
 )
 def test_lz4_roundtrip_property(data):
-    comp = lz4_block_compress(data)
-    assert lz4_block_decompress(comp, len(data)) == data
+    comp = codecs.encode("lz4", data)
+    assert _lz4(comp, len(data)) == data
 
 
 def test_lz4_compresses_repetitive_input():
     data = b"spark" * 400
-    assert len(lz4_block_compress(data)) < len(data) // 10
+    assert len(codecs.encode("lz4", data)) < len(data) // 10
 
 
 # -- blosc container ---------------------------------------------------
@@ -145,8 +201,8 @@ def test_blosc_unknown_codec_id_raises_loudly():
     seed=st.integers(min_value=0, max_value=2**31),
 )
 def test_blosc_snappy_roundtrip_property(n, dtype, shuffle, blocksize, seed):
-    # frames encoded by pyarrow's libsnappy (the reference producer),
-    # decoded by our from-scratch sources/snappy.py
+    # snappy splits encoded and decoded by pyarrow's libsnappy through
+    # the codec table; the blosc framing around them is ours
     rng = np.random.default_rng(seed)
     dt = np.dtype(dtype)
     arr = np.cumsum(rng.integers(0, 3, size=n)).astype(dt)
@@ -338,8 +394,8 @@ def test_zarr_blosc_bitshuffle_store_roundtrip(spark, tmp_path):
 
 
 def test_zarr_blosc_snappy_store_roundtrip(spark, tmp_path):
-    # numcodecs Blosc(cname='snappy') end to end (r7 — decode via our
-    # from-scratch snappy, frames produced by libsnappy)
+    # numcodecs Blosc(cname='snappy') end to end (r7; splits through
+    # libsnappy via the codec table)
     from tests.test_zarr import _write_store
     from bcdp_spark.sources.zarr import load_zarr
 

@@ -492,6 +492,21 @@ def test_connected_components_long_chain_converges(spark):
     assert len(labels) == 41
 
 
+def test_connected_components_max_iter_fails_loudly(spark):
+    """Hitting ``max_iter`` with labels still changing raises, naming
+    the round count, instead of returning partial labels."""
+    from bcdp_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges, max_iter=2)
+    labels = connected_components(edges).collect()
+    assert {r["label"] for r in labels} == {0}
+    assert len(labels) == 64
+
+
 # ---------------------------------------------------------------- packing
 def test_pack_documents_respects_budget_and_is_deterministic(spark):
     from bcdp_spark.operators.packing import pack_documents

@@ -4,8 +4,9 @@ flagging rule — the git/bench plumbing is exercised by the ladder."""
 
 from __future__ import annotations
 
-import sys
+import json
 import os
+import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
@@ -157,3 +158,22 @@ def test_fresh_entries_exec_twin_bridges_timer_change():
     # a payload without twins (pre-r13 baseline) is unaffected by the flag
     old = {"queries_fresh": {"q_a": 0.31}}
     assert _fresh_entries(old, exec_twin=True) == {"sf0.1:q_a": 0.31}
+
+
+def test_sf10_leg_parses_json_lines_not_a_prefix():
+    """bench.py reads an sf10 child's result from its stdout: any JSON
+    line with every result key counts, whatever its key order, and log
+    noise or partial objects are skipped."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from bench import _sf10_leg
+
+    leg = {"stage_reuse": 0.5, "median": 2.0, "min": 1.5}
+    out = "\n".join([
+        "WARN something",
+        '{"min": 1.0}',
+        "[1, 2]",
+        json.dumps(leg),
+        json.dumps({**leg, "min": 9.9}),
+    ])
+    assert _sf10_leg(out) == leg
+    assert _sf10_leg('{"min": 1.0, "median": 2.0}\nnot json') is None

@@ -1,7 +1,6 @@
-"""Snappy raw-block decoder (sources/snappy.py): hand vectors from the
-public format description + certification against pyarrow's bundled
-libsnappy (the reference producer — the same producer/decoder split
-that certifies the zstd codec)."""
+"""Snappy raw blocks through the codec table (sources/codecs.py): hand
+vectors from the public format description, the table's preamble
+check, and round trips through pyarrow's bundled libsnappy."""
 
 from __future__ import annotations
 
@@ -10,7 +9,15 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bcdp_spark.sources.snappy import snappy_compress, snappy_decompress
+from bcdp_spark.sources import codecs
+
+
+def snappy_decompress(src: bytes, expected: int | None = None) -> bytes:
+    return codecs.decode("snappy", src, expected)
+
+
+def snappy_compress(data: bytes) -> bytes:
+    return codecs.encode("snappy", data)
 
 
 # -- hand vectors (format_description.txt semantics) --------------------
@@ -48,24 +55,30 @@ def test_copy2_offset():
 
 def test_bad_offset_raises():
     src = bytes([6, (1 << 2) | 0]) + b"ab" + bytes([(0 << 2) | 1, 9])
-    with pytest.raises(ValueError, match="offset"):
+    with pytest.raises(ValueError, match="snappy"):
         snappy_decompress(src)
 
 
 def test_preamble_mismatch_raises():
     src = bytes([9, (4 << 2) | 0]) + b"hello"
-    with pytest.raises(ValueError, match="decoded 5"):
+    with pytest.raises(ValueError, match="snappy"):
         snappy_decompress(src)
-    with pytest.raises(ValueError, match="container expects"):
+    with pytest.raises(ValueError, match="snappy: preamble says 5"):
         snappy_decompress(bytes([5, (4 << 2) | 0]) + b"hello", expected=6)
+    # the 1-byte empty block must not hand back an uninitialised buffer
+    # of the container's size
+    with pytest.raises(ValueError, match="snappy: preamble says 0"):
+        snappy_decompress(b"\x00", expected=5)
 
 
 def test_truncation_raises():
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="snappy"):
         snappy_decompress(bytes([5, (4 << 2) | 0]) + b"hel")
+    with pytest.raises(ValueError, match="snappy"):
+        snappy_decompress(b"\x80")  # preamble varint cut short
 
 
-# -- certification vs libsnappy -----------------------------------------
+# -- round trips through libsnappy -----------------------------------------
 
 
 @settings(max_examples=120, deadline=None)

@@ -1198,8 +1198,8 @@ def test_zarr_v3_shard_index_crc_verified(spark, tmp_path):
 )
 def test_v2_bz2_lz4_compressor_roundtrip(spark, tmp_path, comp):
     # numcodecs BZ2 (stdlib libbz2) and LZ4 (LE-size + block framing;
-    # blocks produced by pyarrow's lz4_raw, decoded by our own block
-    # decoder) — both have true independent producers in-container
+    # blocks encoded and decoded by pyarrow's lz4_raw via the codec
+    # table)
     store, expect = _write_store(tmp_path, compressor=comp)
     pdf = load_zarr(spark, store).toPandas()
     assert len(pdf) == expect.size

@@ -14,11 +14,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bcdp_spark.sources.zstd import (
-    xxh64,
-    zstd_decompress,
-    zstd_decompress_pure,
-)
+from bcdp_spark.sources import codecs
+from bcdp_spark.sources.zstd import xxh64, zstd_decompress_pure
 
 pa = pytest.importorskip("pyarrow")
 _Z = pa.Codec("zstd")
@@ -157,20 +154,24 @@ def test_expected_size_enforced():
 
 
 def test_dispatcher_matches_pure():
-    """zstd_decompress (pyarrow hot path when size is known, pure
-    fallback otherwise) returns byte-identical output to the pure
-    spec implementation on every shape."""
+    """The codec table's zstd (libzstd when the size is known, the pure
+    decoder otherwise) returns byte-identical output to the pure spec
+    implementation on every shape, and fails loudly naming zstd."""
     rng = np.random.RandomState(42)
     for data in (b"", b"abc" * 1000, rng.bytes(10000),
                  np.round(rng.randn(5000), 2).tobytes()):
         comp = _c(data)
-        assert zstd_decompress(comp, len(data)) == data
-        assert zstd_decompress(comp) == data  # no-size → pure path
-    # concatenated frames with a known total: libzstd one-shot rejects,
-    # dispatcher must fall back to the pure decoder
+        assert codecs.decode("zstd", comp, len(data)) == data
+        assert codecs.decode("zstd", comp) == data  # no-size → pure path
+        assert zstd_decompress_pure(comp) == data
+    # concatenated frames with a known total: whichever decoder takes
+    # them, the output is the whole concatenation
     d1, d2 = b"x" * 500, b"y" * 700
     blob = _c(d1) + _c(d2)
-    assert zstd_decompress(blob, 1200) == d1 + d2
+    assert codecs.decode("zstd", blob, 1200) == d1 + d2
+    for bad, n in ((blob, 1201), (blob, 1199), (blob[:-4], 1200)):
+        with pytest.raises(ValueError, match="zstd"):
+            codecs.decode("zstd", bad, n)
 
 
 # ------------------------------------------------------------ integrations
