@@ -64,10 +64,13 @@ requested at all (loopback-asserted in tests).
 
 from __future__ import annotations
 
+import os
 import struct
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from bcdp_spark.sources.hyperslab import axis_mask, from_bounds, value_matches
 
 # TIFF tag ids (TIFF 6.0 §8 + GeoTIFF 1.1 + GDAL)
 _T_NEW_SUBFILE = 254
@@ -1017,7 +1020,6 @@ def load_geotiff(
     CHIRPS/WorldClim layout). ``transport`` is an injectable urlopen
     for remote tests."""
     import glob as _glob
-    import os
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -1075,19 +1077,7 @@ def load_geotiff(
         if hi is not None:
             index_df = index_df.filter(F.col("lon0") <= float(hi))
     index_df = index_df.repartition("path", "block")
-
-    def _norm_bnds(b):
-        # half-open bounds: None endpoints become infinities so the
-        # decode-side masks stay simple two-sided comparisons
-        if b is None:
-            return None
-        lo, hi = b
-        return (
-            -np.inf if lo is None else float(lo),
-            np.inf if hi is None else float(hi),
-        )
-
-    bounds = {"lat": _norm_bnds(lat_bnds), "lon": _norm_bnds(lon_bnds)}
+    preds = from_bounds(lat_bnds=lat_bnds, lon_bnds=lon_bnds)
 
     schema = T.StructType(
         [
@@ -1100,10 +1090,6 @@ def load_geotiff(
     )
 
     def decode(batches):
-        import pandas as pd
-
-        from bcdp_spark.sources.netcdf import _bounds_mask
-
         metas: dict[str, TiffMeta] = {}
         for pdf in batches:
             for _, row in pdf.iterrows():
@@ -1112,57 +1098,50 @@ def load_geotiff(
                     metas[fpath] = parse_geotiff(
                         _open_raw(fpath, transport), overview=overview
                     )
-                meta = metas[fpath]
                 payload = _read_payload(
                     fpath, int(row["offset"]), int(row["nbytes"]),
                     transport,
                 )
-                block = _decode_block(meta, payload)
-                gl, gw = meta.grid
-                s = int(row["block"]) % meta.n_spatial
-                bi, bj = s // gw, s % gw
-                r0, c0 = bi * meta.block_l, bj * meta.block_w
-                n_r = min(meta.block_l, meta.length - r0)
-                n_c = min(meta.block_w, meta.width - c0)
-                block = block[:n_r, :n_c, :]
-                if meta.xr == 0.0 and meta.yc == 0.0:
-                    lats = meta.lat0 - (r0 + np.arange(n_r)) * meta.dlat
-                    lons = meta.lon0 + (c0 + np.arange(n_c)) * meta.dlon
-                    la_m = _bounds_mask(lats, bounds["lat"])
-                    lo_m = _bounds_mask(lons, bounds["lon"])
-                    lats, lons = lats[la_m], lons[lo_m]
-                    vals = block[np.ix_(la_m, lo_m)]
-                    aa, oo = np.meshgrid(lats, lons, indexing="ij")
-                else:
-                    # rotated grid: lat/lon are not separable — mask
-                    # the full 2-D coordinate grids elementwise
-                    aa, oo = meta.pixel_latlon(r0, c0, n_r, n_c)
-                    keep = np.ones(aa.shape, dtype=bool)
-                    for arr2, bnds in ((aa, bounds["lat"]), (oo, bounds["lon"])):
-                        if bnds is None:
-                            continue
-                        lo, hi = bnds
-                        if lo is not None:
-                            keep &= arr2 >= lo
-                        if hi is not None:
-                            keep &= arr2 <= hi
-                    aa, oo = aa[keep], oo[keep]
-                    vals = block[keep][:, None, :]
-                stem = (
-                    name
-                    if name is not None
-                    else os.path.splitext(os.path.basename(fpath))[0]
+                yield from block_frames(
+                    metas[fpath], int(row["block"]), payload, preds,
+                    name if name is not None else _stem(fpath),
                 )
-                band0 = int(row["band0"])
-                for b in range(vals.shape[2]):
-                    yield pd.DataFrame(
-                        {
-                            "name": stem,
-                            "band": np.int32(band0 + b),
-                            "lat": aa.ravel(),
-                            "lon": oo.ravel(),
-                            "value": vals[:, :, b].ravel(),
-                        }
-                    )
 
     return index_df.mapInPandas(decode, schema=schema)
+
+
+def _stem(fpath: str) -> str:
+    """The default ``name``: the file stem (one variable per file)."""
+    return os.path.splitext(os.path.basename(fpath))[0]
+
+
+def block_frames(meta: TiffMeta, k: int, payload: bytes, preds: dict,
+                 name: str):
+    """Decode unit ``k`` (its exact ``payload`` bytes) → one long-form
+    frame per band that satisfies ``preds``, holding the pixels whose
+    centre satisfies the lat/lon ``preds``. Coordinates come from the
+    full affine (``pixel_latlon``), so axis-aligned and rotated grids
+    share one mask; pixels leave in row-major order."""
+    import pandas as pd
+
+    gw = meta.grid[1]
+    s = k % meta.n_spatial
+    r0, c0 = (s // gw) * meta.block_l, (s % gw) * meta.block_w
+    n_r = min(meta.block_l, meta.length - r0)
+    n_c = min(meta.block_w, meta.width - c0)
+    block = _decode_block(meta, payload)[:n_r, :n_c, :]
+    aa, oo = meta.pixel_latlon(r0, c0, n_r, n_c)
+    keep = axis_mask(aa, preds, "lat") & axis_mask(oo, preds, "lon")
+    vals = block[keep]
+    band0 = meta.unit_band0(k) + 1
+    for b in range(vals.shape[1]):
+        if value_matches(band0 + b, preds, "band"):
+            yield pd.DataFrame(
+                {
+                    "name": name,
+                    "band": np.int32(band0 + b),
+                    "lat": aa[keep],
+                    "lon": oo[keep],
+                    "value": vals[:, b],
+                }
+            )

@@ -1,36 +1,34 @@
-"""PySpark Python DataSource V2 for GeoTIFF/COG rasters with
-filter-pushdown block pruning — the Catalyst-native twin of
-``load_geotiff``'s explicit kwargs (same DSv2 pattern as
-``grib2_datasource`` / ``zarr_datasource``).
+"""PySpark Python DataSource V2 for GeoTIFF/COG rasters: a driver-side
+planner and pushdown adapter over ``load_geotiff``'s block decoder
+(same DSv2 pattern as ``grib2_datasource`` / ``zarr_datasource``).
 
 ``spark.read.format("geotiff").load("/rasters/*.tif")
-     .filter("lat >= 0").filter("name = 'pr.2001.01'")`` plans:
+     .filter("lat >= 0").filter("name = 'pr.2001.01'")`` keeps only
+what is specific to DSv2:
 
-- **one InputPartition per strip/tile decode unit** — the format's
-  native parallelism unit (a COG is exactly a tiled raster whose IFD
-  is front-loaded so the driver-side index read is one small fetch);
-  planar multi-band files get one unit per (band, tile);
-- **driver-side block pruning**: pushed lat/lon range predicates are
-  evaluated against each block's bounding box, ``name`` equality
-  against the file stem, and ``band`` equality against the unit's
-  band span — dropped blocks are never read, let alone decompressed;
-- **executor-side axis masks**: the same lat/lon predicates mask the
-  block's coordinate axes so a 1 % subset materializes 1 % of rows.
+- ``pushFilters()`` — =, <, <=, >, >= on lat/lon, plus
+  ``name = '...'`` (the file stem) and ``band = N``; everything else
+  returns to Spark untouched;
+- ``partitions()`` — one InputPartition per strip/tile decode unit
+  (a COG is exactly a tiled raster whose IFD is front-loaded, so the
+  driver-side index read is one small fetch; planar multi-band files
+  get one unit per (band, tile)). Pushed lat/lon predicates prune
+  against each block's bounding box, ``name`` against the file stem
+  and ``band`` against the unit's band span — dropped blocks are never
+  read, let alone decompressed.
+
+``read()`` is one call to ``geotiff.block_frames``, the decoder
+``load_geotiff`` uses: the pushed predicates mask the block's pixels
+(axis-aligned and rotated grids alike) before the long form exists.
 
 Options: ``overview`` (int) selects a COG pyramid level instead of
 the full-resolution IFD. Paths may be local globs or http(s) URLs —
 remote objects are read via ranged GETs only (header pages + the
 surviving blocks' exact byte ranges).
-
-Accepted-and-enforced filters: =, <, <=, >, >= on lat/lon, plus
-``name = '...'`` and ``band = N``. Everything else returns to Spark
-untouched.
 """
 
 from __future__ import annotations
 
-import glob as _glob
-import os
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -45,7 +43,22 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from bcdp_spark.sources.netcdf_datasource import _RANGE_OPS, _axis_mask
+from bcdp_spark.sources.geotiff import (
+    _open_raw,
+    _read_payload,
+    _stem,
+    block_frames,
+    parse_geotiff,
+)
+from bcdp_spark.sources.hyperslab import (
+    RANGE_FILTERS,
+    arrow_batch,
+    axis_mask,
+    from_filters,
+    span_may_match,
+    value_matches,
+)
+from bcdp_spark.sources.netcdf import _files
 
 _SCHEMA = "name string, band int, lat double, lon double, value double"
 
@@ -85,139 +98,48 @@ class GeoTiffReader(DataSourceReader):
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         for f in filters:
             attr = getattr(f, "attribute", None)
-            if isinstance(f, _RANGE_OPS) and attr in (("lat",), ("lon",)):
+            if isinstance(f, RANGE_FILTERS) and attr in (("lat",), ("lon",)):
                 self._filters.append(f)
             elif isinstance(f, EqualTo) and attr in (("name",), ("band",)):
                 self._filters.append(f)
             else:
                 yield f
 
-    def _keep_bbox(self, bb) -> bool:
-        from bcdp_spark.sources.grib2_datasource import _span_may_match
-
-        la = np.array([bb[0], bb[1]])
-        lo = np.array([bb[2], bb[3]])
-        for f in self._filters:
-            attr = getattr(f, "attribute", None)
-            if attr == ("lat",) and not _span_may_match(la, f):
-                return False
-            if attr == ("lon",) and not _span_may_match(lo, f):
-                return False
-        return True
-
-    def _keep_band(self, band0: int, nbands: int) -> bool:
-        for f in self._filters:
-            if getattr(f, "attribute", None) == ("band",):
-                if not band0 <= int(f.value) < band0 + nbands:
-                    return False
-        return True
-
     def _parse(self, fpath: str):
-        from bcdp_spark.sources.geotiff import _open_raw, parse_geotiff
-
         return parse_geotiff(_open_raw(fpath), overview=self._overview)
 
     def partitions(self) -> list[_Block]:
+        preds = from_filters(self._filters)
         out: list[_Block] = []
-        if self._glob.startswith(("http://", "https://")):
-            files = [self._glob]
-        else:
-            files = sorted(_glob.glob(self._glob))
-        if not files:
-            raise FileNotFoundError(f"no files match {self._glob!r}")
-        for fpath in files:
-            stem = os.path.splitext(os.path.basename(fpath))[0]
-            skip = any(
-                getattr(f, "attribute", None) == ("name",)
-                and stem != f.value
-                for f in self._filters
-            )
-            if skip:
+        for fpath in _files(self._glob):
+            if not value_matches(_stem(fpath), preds, "name"):
                 continue
             meta = self._parse(fpath)
-            gl, gw = meta.grid
-            nb = meta.unit_nbands()
+            gw = meta.grid[1]
+            bands = np.arange(meta.unit_nbands()) + 1
             for k in range(meta.n_units):
                 s = meta.unit_spatial(k)
-                if not self._keep_band(meta.unit_band0(k) + 1, nb):
-                    continue
-                if self._keep_bbox(meta.block_bbox(s // gw, s % gw)):
-                    out.append(
-                        _Block(
-                            path=fpath, block=k,
-                            offset=meta.offsets[k],
-                            nbytes=meta.counts[k],
-                        )
-                    )
+                la0, la1, lo0, lo1 = meta.block_bbox(s // gw, s % gw)
+                if (
+                    axis_mask(bands + meta.unit_band0(k), preds, "band").any()
+                    and span_may_match(la0, la1, preds, "lat")
+                    and span_may_match(lo0, lo1, preds, "lon")
+                ):
+                    out.append(_Block(
+                        path=fpath, block=k, offset=meta.offsets[k],
+                        nbytes=meta.counts[k],
+                    ))
         return out
 
     def read(self, partition: _Block) -> Iterator:
-        import pyarrow as pa
-
-        from bcdp_spark.sources.geotiff import (
-            _decode_block,
-            _read_payload,
-        )
-
-        meta = self._parse(partition.path)
         payload = _read_payload(
             partition.path, partition.offset, partition.nbytes
         )
-        block = _decode_block(meta, payload)
-        gl, gw = meta.grid
-        s = partition.block % meta.n_spatial
-        band0 = meta.unit_band0(partition.block) + 1
-        bi, bj = s // gw, s % gw
-        r0, c0 = bi * meta.block_l, bj * meta.block_w
-        n_r = min(meta.block_l, meta.length - r0)
-        n_c = min(meta.block_w, meta.width - c0)
-        block = block[:n_r, :n_c, :]
-        if meta.xr == 0.0 and meta.yc == 0.0:
-            lats = meta.lat0 - (r0 + np.arange(n_r)) * meta.dlat
-            lons = meta.lon0 + (c0 + np.arange(n_c)) * meta.dlon
-            la_m = _axis_mask(lats, self._filters, "lat")
-            lo_m = _axis_mask(lons, self._filters, "lon")
-            if not la_m.any() or not lo_m.any():
-                return
-            lats, lons = lats[la_m], lons[lo_m]
-            vals = block[np.ix_(la_m, lo_m)]
-            aa, oo = np.meshgrid(lats, lons, indexing="ij")
-        else:
-            # rotated grid (ModelTransformation): coordinates are not
-            # separable, so mask the flattened 2-D grids elementwise
-            aa, oo = meta.pixel_latlon(r0, c0, n_r, n_c)
-            keep = _axis_mask(
-                aa.ravel(), self._filters, "lat"
-            ) & _axis_mask(oo.ravel(), self._filters, "lon")
-            if not keep.any():
-                return
-            aa = aa.ravel()[keep]
-            oo = oo.ravel()[keep]
-            vals = block.reshape(-1, block.shape[2])[keep][:, None, :]
-        n = aa.size
-        stem = os.path.splitext(os.path.basename(partition.path))[0]
-        band_eq = [
-            int(f.value)
-            for f in self._filters
-            if getattr(f, "attribute", None) == ("band",)
-        ]
-        for b in range(vals.shape[2]):
-            band = band0 + b
-            if band_eq and band not in band_eq:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([stem] * n, type=pa.string()),
-                    pa.array([band] * n, type=pa.int32()),
-                    pa.array(aa.ravel(), type=pa.float64()),
-                    pa.array(oo.ravel(), type=pa.float64()),
-                    pa.array(
-                        vals[:, :, b].ravel(), type=pa.float64(),
-                        from_pandas=True,
-                    ),
-                ],
-                names=["name", "band", "lat", "lon", "value"],
-            )
+        for frame in block_frames(
+            self._parse(partition.path), partition.block, payload,
+            from_filters(self._filters), _stem(partition.path),
+        ):
+            yield arrow_batch(frame)
 
 
 def register_geotiff_source(spark) -> None:

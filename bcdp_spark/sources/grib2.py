@@ -58,6 +58,14 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from bcdp_spark.sources.hyperslab import (
+    axis_mask,
+    from_bounds,
+    span_may_match,
+    stream_rows,
+    value_matches,
+)
+
 _TRAILER = b"7777"
 
 # (discipline, category, number) → conventional short name for the
@@ -2037,6 +2045,64 @@ def write_grib2_message(
     return sec0 + body + _TRAILER
 
 
+# -- per-message decoder ------------------------------------------------
+
+
+def index_matches(idx: Grib2Index, preds: dict) -> bool:
+    """Header-only pruning of one message against ``preds``: exact
+    tests on its scalar metadata (a missing member, label, level or
+    level type never matches) and the bounding-box corner test on
+    lat/lon."""
+    level_type = None if idx.level_type == 255 else idx.level_type
+    return (
+        value_matches(idx.name, preds, "name")
+        and value_matches(idx.member, preds, "member")
+        and value_matches(idx.label, preds, "ens_label")
+        and value_matches(level_type, preds, "level_type")
+        and value_matches(idx.level, preds, "level")
+        and value_matches(np.datetime64(idx.valid_time, "us"), preds, "time")
+        and span_may_match(idx.lat0, idx.lat1, preds, "lat")
+        and span_may_match(idx.lon0, idx.lon1, preds, "lon")
+    )
+
+
+def message_frame(
+    path: str, offset: int, length: int, field: int, preds: dict
+):
+    """Decode field ``field`` of the message at ``offset`` (exactly its
+    ``length`` bytes: a pread locally, one ranged GET remotely) to the
+    GRIB long form, keeping the points that satisfy the lat/lon
+    ``preds``. Coordinates are per point: projected (Lambert) and
+    reduced-Gaussian grids carry them in ``lats2d``/``lons2d``; regular
+    grids mesh their 1-D axes."""
+    import pandas as pd
+
+    from bcdp_spark.sources.ranged import read_range
+
+    fld = decode_message(read_range(path, offset, length), 0, field)
+    idx = fld.index
+    if fld.lats2d is not None:
+        la, lo = fld.lats2d, fld.lons2d
+    else:
+        la, lo = np.meshgrid(fld.lats, fld.lons, indexing="ij")
+    m = axis_mask(la, preds, "lat") & axis_mask(lo, preds, "lon")
+    n = int(m.sum())
+    return pd.DataFrame({
+        "name": idx.name,
+        "time": pd.DatetimeIndex([idx.valid_time] * n),
+        "lat": la[m],
+        "lon": lo[m],
+        "value": fld.values[m],
+        "member": pd.array([idx.member] * n, dtype="Int32"),
+        "ens_label": idx.label,
+        "level_type": pd.array(
+            [None if idx.level_type == 255 else idx.level_type] * n,
+            dtype="Int32",
+        ),
+        "level": np.nan if idx.level is None else float(idx.level),
+    })
+
+
 # -- Spark loader ------------------------------------------------------
 
 _INDEX_SCHEMA = (
@@ -2076,7 +2142,7 @@ def load_grib2(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from bcdp_spark.sources.netcdf import LONG_FORM_SCHEMA, _long_form
+    from bcdp_spark.sources.netcdf import LONG_FORM_SCHEMA
 
     # the shared long form plus the GRIB-only coordinates: member
     # (PDT 4.1/4.11 perturbation number) and ens_label (the 4.2/4.12
@@ -2192,80 +2258,22 @@ def load_grib2(
             index_df = index_df.filter(F.col("lat0") <= F.lit(float(hi)))
     # one decode task per field: tiny index rows, cheap shuffle
     index_df = index_df.repartition("path", "offset", "field")
-    bounds = {"lat": lat_bnds, "lon": lon_bnds}
+
+    preds = from_bounds(lat_bnds=lat_bnds, lon_bnds=lon_bnds)
 
     def decode(batches):
         import pandas as pd
 
-        from bcdp_spark.sources.netcdf import _bounds_mask
-
-        def _with_member(pdf_out, idx):
-            pdf_out["member"] = pd.array(
-                [idx.member] * len(pdf_out), dtype="Int32"
-            )
-            pdf_out["ens_label"] = idx.label
-            pdf_out["level_type"] = pd.array(
-                [None if idx.level_type == 255 else idx.level_type]
-                * len(pdf_out),
-                dtype="Int32",
-            )
-            pdf_out["level"] = (
-                np.nan if idx.level is None else float(idx.level)
-            )
-            return pdf_out
-
-        from bcdp_spark.sources.ranged import read_range
-
         for pdf in batches:
             for _, row in pdf.iterrows():
-                # ONE message's bytes — pread locally, a single ranged
-                # GET remotely. The index row carries the message
-                # length, so a 10 GB cycle file never rides whole into
-                # a task that decodes one field of it.
-                raw = read_range(
+                frame = message_frame(
                     str(row["path"]), int(row["offset"]),
-                    int(row["length"]),
+                    int(row["length"]), int(row["field"]), preds,
                 )
-                fld = decode_message(raw, 0, int(row["field"]))
-                if fld.lats2d is not None:
-                    # projected grid (Lambert): coordinates are
-                    # per-point — emit long form directly and apply
-                    # the in-field bounds as a point mask
-                    la = fld.lats2d.ravel()
-                    lo = fld.lons2d.ravel()
-                    m = _bounds_mask(la, bounds["lat"]) & _bounds_mask(
-                        lo, bounds["lon"]
-                    )
-                    yield _with_member(
-                        pd.DataFrame(
-                            {
-                                "name": str(row["name"]),
-                                "time": pd.DatetimeIndex(
-                                    [row["time"]] * int(m.sum())
-                                ),
-                                "lat": la[m],
-                                "lon": lo[m],
-                                "value": fld.values.ravel()[m],
-                            }
-                        ),
-                        fld.index,
-                    )
-                    continue
-                lats, lons, vals = fld.lats, fld.lons, fld.values
-                la_m = _bounds_mask(lats, bounds["lat"])
-                lo_m = _bounds_mask(lons, bounds["lon"])
-                lats, lons = lats[la_m], lons[lo_m]
-                vals = vals[np.ix_(la_m, lo_m)]
-                yield _with_member(
-                    _long_form(
-                        str(row["name"]),
-                        pd.DatetimeIndex([row["time"]] * 1),
-                        lats,
-                        lons,
-                        vals[np.newaxis, :, :],
-                    ),
-                    fld.index,
-                )
+                # the index row's time came through Arrow in the session
+                # zone; returning it as-is keeps the round trip exact
+                frame["time"] = pd.DatetimeIndex([row["time"]] * len(frame))
+                yield frame
 
     return index_df.mapInPandas(decode, schema=_GRIB_LONG_SCHEMA)
 
@@ -2315,33 +2323,21 @@ class Grib2StreamReader(_SimpleStreamReader):
         return {"files": []}
 
     def _rows(self, path: str):
-        with open(path, "rb") as fh:
-            raw = fh.read()
-        for idx in scan_grib2(raw):
-            if self._param is not None and idx.name != self._param:
-                continue
-            if self._member is not None and idx.member != self._member:
-                continue
-            if self._label is not None and idx.label != self._label:
-                continue
-            fld = decode_message(raw, idx.offset, idx.field)
-            vt = idx.valid_time
-            for j, lat in enumerate(fld.lats):
-                row = fld.values[j]
-                for i, lon in enumerate(fld.lons):
-                    v = row[i]
-                    yield (
-                        path,
-                        idx.name,
-                        vt,
-                        float(lat),
-                        float(lon),
-                        None if v != v else float(v),
-                        idx.member,
-                        idx.label,
-                        None if idx.level_type == 255 else idx.level_type,
-                        idx.level,
-                    )
+        from bcdp_spark.sources.ranged import open_raw
+
+        preds = {
+            col: (("=", v),)
+            for col, v in (("name", self._param), ("member", self._member),
+                           ("ens_label", self._label))
+            if v is not None
+        }
+        for idx in scan_grib2(open_raw(path)):
+            if index_matches(idx, preds):
+                frame = message_frame(
+                    path, idx.offset, idx.length, idx.field, preds
+                )
+                frame.insert(0, "file", path)
+                yield from stream_rows(frame)
 
     def read(self, start: dict):
         import glob as _glob

@@ -1,38 +1,34 @@
-"""PySpark Python DataSource V2 for GRIB2 archives with filter-pushdown
-message pruning — the Catalyst-native twin of ``load_grib2``'s explicit
-kwargs (same DSv2 pattern as ``netcdf_datasource`` / ``zarr_datasource``).
+"""PySpark Python DataSource V2 for GRIB2 archives: a driver-side
+planner and pushdown adapter over ``load_grib2``'s message decoder
+(same DSv2 pattern as ``netcdf_datasource`` / ``zarr_datasource``).
 
 ``spark.read.format("grib2").load("/cycles/*.grib2")
-     .filter("name = 't'").filter("lat >= 0")`` plans:
+     .filter("name = 't'").filter("lat >= 0")`` keeps only what is
+specific to DSv2:
 
-- **one InputPartition per MESSAGE** — the format's native parallelism
-  unit (one 2-D field per message, thousands per cycle file), planned
-  from a driver-side header-only index (section 7 never touched);
-- **driver-side message pruning**: pushed ``name`` equality and
-  time/lat/lon range predicates are evaluated against each message's
-  index row (param, valid time, bounding box) — dropped messages are
-  never scheduled, let alone unpacked;
-- **executor-side axis masks**: the same lat/lon predicates mask the
-  field's coordinate axes BEFORE the mesh materializes, so a 1 %
-  subset materializes 1 % of the rows.
+- ``pushFilters()`` — =, <, <=, >, >= on time/lat/lon/level, and
+  equality on ``name``, ``member`` (PDT 4.1/4.11 perturbation number —
+  one ensemble member scans without touching the others' fields),
+  ``ens_label`` (the 4.2/4.12 derived / 4.5/4.9 probability /
+  4.6/4.10 percentile product tag, e.g. 'em', 'es', 'p50',
+  'prob_gt_2') and ``level_type``. Everything else is returned to
+  Spark untouched (evaluated post-scan), so the source is always
+  correct — pushdown only changes how much work is skipped;
+- ``partitions()`` — one InputPartition per MESSAGE field, planned
+  from a driver-side header-only index (section 7 never touched) and
+  pruned by ``grib2.index_matches`` against each message's param,
+  valid time, level and bounding box.
 
-Accepted-and-enforced filters: =, <, <=, >, >= on time/lat/lon,
-``name = '...'``, ``member = N`` (PDT 4.1/4.11 perturbation number —
-one ensemble member scans without touching the others' fields), and
-``ens_label = '...'`` (the 4.2/4.12 derived / 4.5/4.9 probability /
-4.6/4.10 percentile product tag, e.g. 'em', 'es', 'p50',
-'prob_gt_2'). Everything else is returned to Spark untouched
-(evaluated post-scan), so the source is always correct — pushdown only
-changes how much work is skipped.
+``read()`` is one call to ``grib2.message_frame``, the decoder
+``load_grib2`` and the ``grib2-stream`` reader use too: per-point
+coordinates (degrees on projected and reduced-Gaussian grids as well)
+masked by the pushed lat/lon predicates.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 from collections.abc import Iterator
 from dataclasses import dataclass
-
-import numpy as np
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -43,11 +39,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from bcdp_spark.sources.netcdf_datasource import (
-    _RANGE_OPS,
-    _axis_mask,
-    _norm_value,
-)
+from bcdp_spark.sources.grib2 import index_matches, message_frame, scan_grib2
+from bcdp_spark.sources.hyperslab import RANGE_FILTERS, arrow_batch, from_filters
+from bcdp_spark.sources.netcdf import _files
+from bcdp_spark.sources.ranged import open_raw
 
 _SCHEMA = (
     "name string, time timestamp, lat double, lon double, value double, "
@@ -86,11 +81,10 @@ class Grib2Reader(DataSourceReader):
         self._filters: list[Filter] = []
         self._index = None
 
-    # ------------------------------------------------------ pushdown
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         for f in filters:
             attr = getattr(f, "attribute", None)
-            if isinstance(f, _RANGE_OPS) and attr in (
+            if isinstance(f, RANGE_FILTERS) and attr in (
                 ("time",), ("lat",), ("lon",), ("level",)
             ):
                 self._filters.append(f)
@@ -101,155 +95,33 @@ class Grib2Reader(DataSourceReader):
             else:
                 yield f
 
-    # --------------------------------------------------- message plan
     def _plan(self):
-        # index once on the driver (header-only; memo pickled to tasks)
-        from bcdp_spark.sources.grib2 import scan_grib2
-
+        # index once on the driver (header-only; memo pickled to tasks):
+        # mmap locally / ranged GETs remotely, section 7 never touched
         if self._index is None:
-            from bcdp_spark.sources.ranged import open_raw
-
-            if self._glob.startswith(("http://", "https://")):
-                files = [self._glob]
-            else:
-                files = sorted(_glob.glob(self._glob))
-            if not files:
-                raise FileNotFoundError(f"no files match {self._glob!r}")
-            index = []
-            for f in files:
-                # mmap locally / ranged GETs remotely; the header-only
-                # scan never touches section-7 bodies
-                for idx in scan_grib2(open_raw(f)):
-                    index.append((f, idx))
-            self._index = index
+            self._index = [
+                (f, idx)
+                for f in _files(self._glob)
+                for idx in scan_grib2(open_raw(f))
+            ]
         return self._index
 
-    def _keep(self, idx) -> bool:
-        import numpy as np  # noqa: F811 (executor re-import parity)
-
-        for f in self._filters:
-            if getattr(f, "attribute", None) == ("name",):
-                if idx.name != f.value:
-                    return False
-            if getattr(f, "attribute", None) == ("member",):
-                # PDT 4.1/4.11 perturbation number; deterministic
-                # messages (member NULL) never equal a literal
-                if idx.member is None or int(idx.member) != int(f.value):
-                    return False
-            if getattr(f, "attribute", None) == ("ens_label",):
-                if idx.label is None or idx.label != f.value:
-                    return False
-            if getattr(f, "attribute", None) == ("level_type",):
-                if idx.level_type == 255 or int(idx.level_type) != int(
-                    f.value
-                ):
-                    return False
-            if getattr(f, "attribute", None) == ("level",):
-                # a NULL level (entire atmosphere / missing) never
-                # satisfies a range or equality predicate
-                if idx.level is None or not _span_may_match(
-                    np.array([idx.level, idx.level]), f
-                ):
-                    return False
-        t = np.array([np.datetime64(idx.valid_time, "us")])
-        if not _axis_mask(t, self._filters, "time").any():
-            return False
-        # bbox check: the message survives if ANY part of its lat/lon
-        # span can satisfy every pushed range predicate
-        la = np.array([idx.lat0, idx.lat1])
-        lo = np.array([idx.lon0, idx.lon1])
-        for f in self._filters:
-            attr = getattr(f, "attribute", None)
-            if attr == ("lat",) and not _span_may_match(la, f):
-                return False
-            if attr == ("lon",) and not _span_may_match(lo, f):
-                return False
-        return True
-
     def partitions(self) -> list[_Msg]:
+        preds = from_filters(self._filters)
         return [
             _Msg(
                 path=f, offset=idx.offset, field=idx.field,
                 length=idx.length,
             )
             for f, idx in self._plan()
-            if self._keep(idx)
+            if index_matches(idx, preds)
         ]
 
-    # ----------------------------------------------------------- read
     def read(self, partition: _Msg) -> Iterator:
-        import pandas as pd
-        import pyarrow as pa
-
-        from bcdp_spark.sources.grib2 import decode_message
-        from bcdp_spark.sources.ranged import read_range
-
-        # exactly this message's bytes (pread / one ranged GET), and
-        # THIS field of it — multi-field messages decode field k, not
-        # field 0 repeated
-        raw = read_range(
-            partition.path, partition.offset, partition.length
-        )
-        fld = decode_message(raw, 0, partition.field)
-        la_m = _axis_mask(fld.lats, self._filters, "lat")
-        lo_m = _axis_mask(fld.lons, self._filters, "lon")
-        if not la_m.any() or not lo_m.any():
-            return
-        lats = fld.lats[la_m]
-        lons = fld.lons[lo_m]
-        vals = fld.values[np.ix_(la_m, lo_m)].ravel()
-        ai, oi = np.meshgrid(
-            np.arange(len(lats)), np.arange(len(lons)), indexing="ij"
-        )
-        n = vals.size
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([fld.index.name] * n, type=pa.string()),
-                pa.array(
-                    pd.DatetimeIndex([fld.index.valid_time] * n),
-                    type=pa.timestamp("us"),
-                ),
-                pa.array(lats[ai.ravel()], type=pa.float64()),
-                pa.array(lons[oi.ravel()], type=pa.float64()),
-                pa.array(vals, type=pa.float64(), from_pandas=True),
-                pa.array([fld.index.member] * n, type=pa.int32()),
-                pa.array([fld.index.label] * n, type=pa.string()),
-                pa.array(
-                    [None if fld.index.level_type == 255
-                     else fld.index.level_type] * n,
-                    type=pa.int32(),
-                ),
-                pa.array([fld.index.level] * n, type=pa.float64()),
-            ],
-            names=[
-                "name", "time", "lat", "lon", "value", "member",
-                "ens_label", "level_type", "level",
-            ],
-        )
-
-
-def _span_may_match(span: np.ndarray, f: Filter) -> bool:
-    """Can any value in [span.min(), span.max()] satisfy the filter?"""
-    from pyspark.sql.datasource import (
-        GreaterThan,
-        GreaterThanOrEqual,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    lo, hi = float(span.min()), float(span.max())
-    v = _norm_value(f.value)
-    if isinstance(f, EqualTo):
-        return lo <= v <= hi
-    if isinstance(f, GreaterThan):
-        return hi > v
-    if isinstance(f, GreaterThanOrEqual):
-        return hi >= v
-    if isinstance(f, LessThan):
-        return lo < v
-    if isinstance(f, LessThanOrEqual):
-        return lo <= v
-    return True
+        yield arrow_batch(message_frame(
+            partition.path, partition.offset, partition.length,
+            partition.field, from_filters(self._filters),
+        ))
 
 
 def register_grib2_source(spark) -> None:

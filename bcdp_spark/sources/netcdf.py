@@ -15,9 +15,10 @@ files use netCDF4 when importable and otherwise decode through the
 vendored pure-Python HDF5 subset reader (``bcdp_spark.sources.hdf5``:
 superblock v0/v2, object headers v1/v2, contiguous + chunked B-tree
 layouts, deflate/shuffle filters — the subset NetCDF-4 climate archives
-actually use). A v2 upgrade path is a PySpark 4 Python DataSource
-(spark.dataSource.register) with predicate pushdown mapped to hyperslab
-slices (SURVEY.md §4).
+actually use). ``_decode_one`` is the one per-file decoder: the
+loader, the ``format("netcdf")`` DataSource V2 reader
+(``netcdf_datasource``, predicate pushdown mapped to hyperslab slices,
+SURVEY.md §4) and the stream reader all call it.
 
 Scale: one manifest row per file, one task per file — the natural unit
 of parallelism for multi-file model output; at 100 TB the manifest is
@@ -35,6 +36,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from bcdp_spark.sources.hyperslab import axis_mask, from_bounds
 
 LONG_FORM_SCHEMA = T.StructType(
     [
@@ -159,6 +162,27 @@ def load_netcdf(
     payload slab, so there the win is materialization, not IO). An
     http(s) URL (or explicit list of paths/URLs) reads HDF5-backed
     members via ranged requests — pruned chunks are never fetched."""
+    files = _files(path)
+    preds = from_bounds(
+        time_bnds=time_bnds, lev_bnds=lev_bnds, lat_bnds=lat_bnds,
+        lon_bnds=lon_bnds,
+    )
+    from bcdp_spark.sources.manifest import spread_manifest
+
+    manifest = spread_manifest(spark, [(f,) for f in files], "path string")
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for fpath in pdf["path"]:
+                yield _decode_one(fpath, var, preds)
+
+    return manifest.mapInPandas(
+        decode, schema=_long_form_schema(files, var)
+    )
+
+
+def _files(path) -> list:
+    """A glob, one http(s) URL, or an explicit list → the file list."""
     if isinstance(path, (list, tuple)):
         files = list(path)
     elif _is_url(path):
@@ -167,48 +191,92 @@ def load_netcdf(
         files = sorted(_glob.glob(path))
     if not files:
         raise FileNotFoundError(f"no files match {path!r}")
-    bounds = {
-        "time": time_bnds, "lev": lev_bnds, "lat": lat_bnds, "lon": lon_bnds,
-    }
+    return files
+
+
+def _long_form_schema(files: list, var: str | None) -> T.StructType:
+    """3-D or 4-D long form, fixed by a header-only peek at the first
+    file. An undecodable header (unsupported HDF5 feature, or corrupt
+    bytes) keeps the load lazy: the 3-D schema, and the distributed
+    decode raises the clear error at action time."""
     try:
-        ndim = _var_ndim(files[0], var)
+        ndim = _var_ndim(files[0], var) if files else 3
     except (NotImplementedError, ValueError):
-        # Undecodable header (unsupported HDF5 feature, or corrupt
-        # bytes): keep the load lazy — default to the 3-D schema and let
-        # the distributed decode raise the clear error at action time.
         ndim = 3
-    schema = LONG_FORM_SCHEMA_4D if ndim == 4 else LONG_FORM_SCHEMA
-    from bcdp_spark.sources.manifest import spread_manifest
-
-    manifest = spread_manifest(spark, [(f,) for f in files], "path string")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath in pdf["path"]:
-                yield _decode_one(fpath, var, bounds)
-
-    return manifest.mapInPandas(decode, schema=schema)
+    return LONG_FORM_SCHEMA_4D if ndim == 4 else LONG_FORM_SCHEMA
 
 
-def _bounds_mask(vals: np.ndarray, bnds) -> np.ndarray:
-    """Inclusive-range mask over one coordinate axis (None = all)."""
-    if bnds is None:
-        return np.ones(len(vals), dtype=bool)
-    lo, hi = bnds
-    if np.issubdtype(np.asarray(vals).dtype, np.datetime64):
-        lo = np.datetime64(pd.Timestamp(lo), "us")
-        hi = np.datetime64(pd.Timestamp(hi), "us")
-    return (vals >= lo) & (vals <= hi)
+def _cf_times(values, attrs: dict) -> pd.DatetimeIndex:
+    """CF time decode of a raw time axis (calendar attr honored)."""
+    from bcdp_spark.sources.cfcal import times_to_timestamps
+
+    return times_to_timestamps(
+        np.asarray(values, dtype=float),
+        str(attrs.get("units", "days since 1970-01-01")),
+        str(attrs.get("calendar", "standard")),
+    )
 
 
-def _mask_cube(times, lats, lons, data, levs, bounds):
-    """Apply bounds masks to all axes + the data cube (before the
-    mesh); returns the masked quintet."""
-    tmask = _bounds_mask(np.asarray(times.values), bounds.get("time"))
-    amask = _bounds_mask(lats, bounds.get("lat"))
-    omask = _bounds_mask(lons, bounds.get("lon"))
+def _plan_slabs(fpath: str, var: str | None, preds: dict) -> list:
+    """Driver-side plan for one file: the ``(t0, t1)`` time-index slabs
+    that may hold a match. A chunked HDF5 member splits into one slab
+    per time chunk (contiguous layouts stay one slab); a classic file
+    is one whole-file unit ``(-1, -1)``. Time predicates drop slabs
+    against the time axis, read header-only (a few KB, never the
+    payload)."""
+    if _magic4(fpath) == b"\x89HDF":
+        h5 = _open_hdf5(fpath)
+        ds = h5.datasets[_pick_var(
+            {k: len(d.shape) for k, d in h5.datasets.items()},
+            _h5_dims(h5),
+            var,
+        )]
+        n_t = ds.shape[0]
+        if ds.layout == "chunked" and ds.chunk_shape and n_t > ds.chunk_shape[0]:
+            step = ds.chunk_shape[0]
+            slabs = [(t0, min(t0 + step, n_t)) for t0 in range(0, n_t, step)]
+        else:
+            slabs = [(0, n_t)]
+        tname = _resolve_coord(
+            "time", list(h5.datasets), lambda n: h5.datasets[n].attrs
+        )
+        if "time" not in preds or tname is None:
+            return slabs
+        keep = axis_mask(
+            _cf_times(h5.read(tname), h5.datasets[tname].attrs).to_numpy(),
+            preds, "time",
+        )
+        return [(t0, t1) for t0, t1 in slabs if keep[t0:t1].any()]
+    if _is_url(fpath):
+        raise NotImplementedError(
+            "remote classic (CDF) NetCDF is not supported — "
+            "serve HDF5-backed NetCDF-4 over http(s) instead"
+        )
+    if "time" in preds:
+        from bcdp_spark.sources.netcdf3 import read_header, read_var
+
+        with open(fpath, "rb") as fh:
+            nc = read_header(fh)
+            tname = _resolve_coord(
+                "time", list(nc.variables), lambda n: nc.variables[n].attrs
+            )
+            if tname is not None:
+                times = _cf_times(
+                    read_var(fh, nc, tname), nc.variables[tname].attrs
+                )
+                if not axis_mask(times.to_numpy(), preds, "time").any():
+                    return []
+    return [(-1, -1)]
+
+
+def _mask_cube(times, lats, lons, data, levs, preds):
+    """Apply the predicate masks to all axes + the data cube (before
+    the mesh); returns the masked quintet."""
+    tmask = axis_mask(times.values, preds, "time")
+    amask = axis_mask(lats, preds, "lat")
+    omask = axis_mask(lons, preds, "lon")
     if levs is not None:
-        lmask = _bounds_mask(levs, bounds.get("lev"))
+        lmask = axis_mask(levs, preds, "lev")
         data = data[np.ix_(tmask, lmask, amask, omask)]
         levs = levs[lmask]
     else:
@@ -216,34 +284,39 @@ def _mask_cube(times, lats, lons, data, levs, bounds):
     return times[tmask], lats[amask], lons[omask], data, levs
 
 
-def _decode_one(fpath: str, var: str | None, bounds: dict | None = None) -> pd.DataFrame:
+def _decode_one(
+    fpath: str, var: str | None, preds: dict | None = None,
+    t_slab: tuple[int, int] | None = None,
+) -> pd.DataFrame:
     """Decode one NetCDF file to long form: CF time decode (calendar
     attr honored), _FillValue/missing_value → NaN (→ SQL NULL),
-    (time, lat, lon) mesh flattened. Classic files use the vendored
-    pure-Python codec; HDF5-backed files require netCDF4 (or the
-    vendored HDF5 reader — always used for remote URLs, where the
-    netCDF4 C library could not do ranged reads anyway)."""
+    (time[, lev], lat, lon) mesh flattened after the ``preds``
+    hyperslab. Classic files use the vendored pure-Python codec;
+    HDF5-backed files require netCDF4 (or the vendored HDF5 reader —
+    always used for remote URLs, where the netCDF4 C library could not
+    do ranged reads anyway, and for a ``t_slab`` time-index window,
+    the unit of a chunk-parallel scan)."""
     head = _magic4(fpath)
-    bounds = bounds or {}
+    preds = preds or {}
     if head[:3] == b"CDF":
         if _is_url(fpath):
             raise NotImplementedError(
                 "remote classic (CDF) NetCDF is not supported — serve "
                 "HDF5-backed NetCDF-4 over http(s) instead"
             )
-        return _decode_classic(fpath, var, bounds)
+        return _decode_classic(fpath, var, preds)
     if head != b"\x89HDF":
         raise ValueError(
             f"{fpath}: not a NetCDF file (neither classic CDF nor "
             "NetCDF-4/HDF5 magic)"
         )
-    if _is_url(fpath):
-        return _decode_hdf5(fpath, var, bounds)
+    if _is_url(fpath) or t_slab is not None:
+        return _decode_hdf5(fpath, var, preds, t_slab)
     try:
         import netCDF4  # type: ignore  # noqa: F401
     except ImportError:
-        return _decode_hdf5(fpath, var, bounds)
-    return _decode_nc4(fpath, var, bounds)
+        return _decode_hdf5(fpath, var, preds)
+    return _decode_nc4(fpath, var, preds)
 
 
 # CF coordinate-name aliases (ERA5 writes latitude/longitude, ocean
@@ -377,10 +450,7 @@ def _apply_fill(data: np.ndarray, attrs: dict) -> np.ndarray:
     return out
 
 
-def _decode_classic(
-    fpath: str, var: str | None, bounds: dict | None = None
-) -> pd.DataFrame:
-    from bcdp_spark.sources.cfcal import times_to_timestamps
+def _decode_classic(fpath: str, var: str | None, preds: dict) -> pd.DataFrame:
     from bcdp_spark.sources.netcdf3 import read_netcdf3
 
     with open(fpath, "rb") as fh:
@@ -394,11 +464,7 @@ def _decode_classic(
     names = list(nc.variables)
     av = lambda n: nc.variables[n].attrs  # noqa: E731
     tvar = nc.variables[_coord_or_raise("time", names, av)]
-    times = times_to_timestamps(
-        np.asarray(tvar.data, dtype=float),
-        str(tvar.attrs.get("units", "days since 1970-01-01")),
-        str(tvar.attrs.get("calendar", "standard")),
-    )
+    times = _cf_times(tvar.data, tvar.attrs)
     lats = np.asarray(
         nc.variables[_coord_or_raise("lat", names, av)].data, dtype=float
     )
@@ -418,9 +484,9 @@ def _decode_classic(
             if lev_name in nc.variables
             else np.arange(v.shape[1], dtype=float)
         )
-    if bounds and any(b is not None for b in bounds.values()):
+    if preds:
         times, lats, lons, data, levs = _mask_cube(
-            times, lats, lons, data, levs, bounds
+            times, lats, lons, data, levs, preds
         )
     return _long_form(
         fpath.rsplit("/", 1)[-1], times, lats, lons, data, levs
@@ -460,16 +526,15 @@ def _h5_dims(h5) -> set:
 
 
 def _decode_hdf5(
-    fpath: str, var: str | None, bounds: dict | None = None
+    fpath: str, var: str | None, preds: dict,
+    t_slab: tuple[int, int] | None = None,
 ) -> pd.DataFrame:
     """NetCDF-4/HDF5 decode via the vendored stdlib codec
     (bcdp_spark.sources.hdf5) — the no-dependency path the container
     needs. Same semantics as the classic path: CF calendar-aware time
-    decode, _FillValue → NaN, name-based coordinates. Bounds become an
-    index-slab ``H5File.read(sel=...)`` — chunks wholly outside the
-    request are never decompressed."""
-    from bcdp_spark.sources.cfcal import times_to_timestamps
-
+    decode, _FillValue → NaN, name-based coordinates. Predicates and
+    the ``t_slab`` window become an index-slab ``H5File.read(sel=...)``
+    — chunks wholly outside the request are never decompressed."""
     h5 = _open_hdf5(fpath)
     var = _pick_var(
         {k: len(d.shape) for k, d in h5.datasets.items()},
@@ -480,12 +545,7 @@ def _decode_hdf5(
     names = list(h5.datasets)
     av = lambda n: h5.datasets[n].attrs  # noqa: E731
     tname = _coord_or_raise("time", names, av)
-    tattrs = h5.datasets[tname].attrs
-    times = times_to_timestamps(
-        np.asarray(h5.read(tname), dtype=float),
-        str(tattrs.get("units", "days since 1970-01-01")),
-        str(tattrs.get("calendar", "standard")),
-    )
+    times = _cf_times(h5.read(tname), h5.datasets[tname].attrs)
     lats = np.asarray(
         h5.read(_coord_or_raise("lat", names, av)), dtype=float
     )
@@ -501,16 +561,19 @@ def _decode_hdf5(
             and h5.datasets[lname].shape[0] == v.shape[1]
             else np.arange(v.shape[1], dtype=float)
         )
-    bounds = bounds or {}
-    if any(b is not None for b in bounds.values()):
+    if preds or t_slab is not None:
         axes = [np.asarray(times.values), lats, lons]
         keys = ["time", "lat", "lon"]
         if levs is not None:
             axes.insert(1, levs)
             keys.insert(1, "lev")
+        masks = [axis_mask(ax, preds, key) for ax, key in zip(axes, keys)]
+        if t_slab is not None:
+            masks[0][: t_slab[0]] = False
+            masks[0][t_slab[1] :] = False
         sels = []
-        for ax, key in zip(axes, keys):
-            idx = np.flatnonzero(_bounds_mask(ax, bounds.get(key)))
+        for m in masks:
+            idx = np.flatnonzero(m)
             sels.append(
                 slice(int(idx[0]), int(idx[-1]) + 1)
                 if len(idx)
@@ -527,7 +590,7 @@ def _decode_hdf5(
         # exact mask inside the (index-contiguous) slab — handles
         # unsorted axes where the slab over-covers
         times, lats, lons, data, levs = _mask_cube(
-            times, lats, lons, data, levs, bounds
+            times, lats, lons, data, levs, preds
         )
     else:
         data = _apply_fill(np.asarray(h5.read(var), dtype=float), v.attrs)
@@ -536,9 +599,7 @@ def _decode_hdf5(
     )
 
 
-def _decode_nc4(
-    fpath: str, var: str | None, bounds: dict | None = None
-) -> pd.DataFrame:
+def _decode_nc4(fpath: str, var: str | None, preds: dict) -> pd.DataFrame:
     """netCDF4-backed decode (HDF5 files, when the codec is present).
     Time conversion goes through cfcal (NOT pd.to_datetime(str(...)))
     so non-Gregorian calendars behave identically to the classic path."""
@@ -580,9 +641,9 @@ def _decode_nc4(
                 if lev_name in ds.variables
                 else np.arange(v.shape[1], dtype=float)
             )
-        if bounds and any(b is not None for b in bounds.values()):
+        if preds:
             times, lats, lons, data, levs = _mask_cube(
-                times, lats, lons, data, levs, bounds
+                times, lats, lons, data, levs, preds
             )
         return _long_form(
             fpath.rsplit("/", 1)[-1], times, lats, lons, data, levs
@@ -598,19 +659,30 @@ def load_netcdf_vars(
     var_col: str = "name",
 ) -> DataFrame:
     """Multi-variable dataset load (the reference's multi-var xarray
-    Dataset, bcdp/core.py [UNVERIFIED]): union the long forms of several
-    data variables from the same file set, tagged by variable name in
+    Dataset, bcdp/core.py [UNVERIFIED]): the long forms of several data
+    variables from the same file set, tagged by variable name in
     ``var_col`` — so P1 variable-select downstream is a plain filter.
-    Each variable is an independent manifest fan-out (payload reads are
-    per-variable anyway in the classic format: contiguous per-variable
-    blocks); headers re-parse per variable at KB cost."""
+    One ``(path, var)`` manifest, one task per pair, one ``mapInPandas``
+    (no ``Union``); rows come in variable then file order. All
+    variables must share a rank (3-D or 4-D)."""
     if not variables:
         raise ValueError("variables must be a non-empty list")
-    out = None
-    for v in variables:
-        df = load_netcdf(spark, path, var=v)
-        from pyspark.sql import functions as F
+    files = _files(path)
+    schema = _long_form_schema(files, variables[0])
+    if var_col != "name":
+        schema = T.StructType([*schema.fields]).add(var_col, "string")
+    from bcdp_spark.sources.manifest import spread_manifest
 
-        df = df.withColumn(var_col, F.lit(v))
-        out = df if out is None else out.unionByName(df)
-    return out
+    manifest = spread_manifest(
+        spark, [(f, v) for v in variables for f in files],
+        "path string, var string",
+    )
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for fpath, v in zip(pdf["path"], pdf["var"]):
+                frame = _decode_one(fpath, v)
+                frame[var_col] = v
+                yield frame
+
+    return manifest.mapInPandas(decode, schema=schema)

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F, types as T
 
 from bcdp_spark.sources import codecs
 from bcdp_spark.sources.blosc import CNAMES as _BLOSC_CNAMES
+from bcdp_spark.sources.hyperslab import axis_mask, from_bounds, span_may_match
 from bcdp_spark.sources.netcdf import (
     LONG_FORM_SCHEMA,
     LONG_FORM_SCHEMA_4D,
@@ -1064,12 +1065,8 @@ def read_array(
     """Whole-array read (driver-side; used for the SMALL 1-D coordinate
     arrays only — the data variable goes through the distributed path)."""
     meta = read_array_meta(store, name, consolidated)
-    grid = [range((s + c - 1) // c) for s, c in zip(meta.shape, meta.chunks)]
     out = np.empty(meta.shape, dtype=meta.dtype)
-    idxs = [()]
-    for g in grid:
-        idxs = [i + (j,) for i in idxs for j in g]
-    for idx in idxs:
+    for idx in _chunk_grid(meta):
         sl = tuple(
             slice(i * c, min((i + 1) * c, s))
             for i, c, s in zip(idx, meta.chunks, meta.shape)
@@ -1149,25 +1146,10 @@ def _decode_time(values: np.ndarray, attrs: dict) -> pd.DatetimeIndex:
     return pd.DatetimeIndex(pd.to_datetime(values))
 
 
-def _span_overlaps(vals: np.ndarray, bnds: tuple[float, float] | None) -> bool:
-    if bnds is None or len(vals) == 0:
-        return True
-    lo, hi = bnds
-    return float(vals.max()) >= lo and float(vals.min()) <= hi
-
-
-def _plan_chunks(
-    store: str,
-    var: str | None,
-    time_bnds: tuple | None,
-    lev_bnds: tuple[float, float] | None,
-    lat_bnds: tuple[float, float] | None,
-    lon_bnds: tuple[float, float] | None,
-):
-    """Driver-side chunk planning: decode the tiny coordinate arrays,
-    enumerate the chunk grid, and prune chunks whose coordinate span is
-    wholly outside the requested bounds. Returns
-    (name, meta, coords, kept_idxs, total_chunks)."""
+def _open_store(store: str, var: str | None):
+    """The data variable's metadata plus its 1-D coordinate arrays,
+    decoded once on the driver (time through CF units). Returns
+    (name, meta, coords)."""
     consolidated = read_consolidated(store)
     name, meta = _pick_data_var(store, var, consolidated)
     dims = meta.dims
@@ -1176,9 +1158,6 @@ def _plan_chunks(
             f"{name}: need a 3-D or 4-D array with _ARRAY_DIMENSIONS "
             f"(shape={meta.shape}, dims={dims})"
         )
-    has_lev = len(meta.shape) == 4
-
-    # tiny 1-D coordinate arrays, decoded once on the driver
     coords: dict[str, np.ndarray] = {}
     for d in dims:
         vals, cattrs = read_array(store, d, consolidated)
@@ -1187,44 +1166,79 @@ def _plan_chunks(
             if d == dims[0]
             else np.asarray(vals, dtype="float64")
         )
+    return name, meta, coords
 
-    tb = None
-    if time_bnds is not None:
-        tb = (
-            np.datetime64(pd.Timestamp(time_bnds[0])),
-            np.datetime64(pd.Timestamp(time_bnds[1])),
-        )
 
-    # chunk manifest with pruning: a chunk's coordinate span is a closed
-    # form of its grid index — chunks wholly outside any bound never load
-    ngrid = [(s + c - 1) // c for s, c in zip(meta.shape, meta.chunks)]
-    idxs: list[tuple[int, ...]] = [()]
-    for g in ngrid:
-        idxs = [i + (j,) for i in idxs for j in range(g)]
+def _chunk_grid(meta: ZArrayMeta) -> list[tuple[int, ...]]:
+    """Every chunk grid index, in C order."""
+    return list(itertools.product(
+        *(range((s + c - 1) // c) for s, c in zip(meta.shape, meta.chunks))
+    ))
 
-    kept: list[tuple[int, ...]] = []
-    for idx in idxs:
-        t_vals = _chunk_coord(meta, coords, 0, idx[0])
-        if tb is not None and not (
-            t_vals.max() >= tb[0] and t_vals.min() <= tb[1]
+
+def _columns(meta: ZArrayMeta) -> tuple[str, ...]:
+    """Long-form coordinate column of each array dimension."""
+    if len(meta.shape) == 4:
+        return ("time", "lev", "lat", "lon")
+    return ("time", "lat", "lon")
+
+
+def _plan_chunks(store: str, var: str | None, preds: dict):
+    """Driver-side chunk planning: decode the tiny coordinate arrays,
+    enumerate the chunk grid, and prune it (``_kept_chunks``). Returns
+    (name, meta, coords, kept_idxs, total_chunks)."""
+    name, meta, coords = _open_store(store, var)
+    return (name, meta, coords, *_kept_chunks(meta, coords, preds))
+
+
+def _kept_chunks(meta: ZArrayMeta, coords: dict, preds: dict):
+    """(kept grid indices, total chunk count): a chunk is kept when
+    every column's coordinate span may satisfy ``preds``
+    (``hyperslab.span_may_match`` — a chunk's span is a closed form of
+    its grid index)."""
+    grid = _chunk_grid(meta)
+    cols = _columns(meta)
+    kept = []
+    for idx in grid:
+        spans = (_chunk_coord(meta, coords, d, i) for d, i in enumerate(idx))
+        if all(
+            len(v) == 0 or span_may_match(v.min(), v.max(), preds, col)
+            for v, col in zip(spans, cols)
         ):
-            continue
-        if has_lev and not _span_overlaps(
-            _chunk_coord(meta, coords, 1, idx[1]), lev_bnds
-        ):
-            continue
-        if not _span_overlaps(_chunk_coord(meta, coords, -2, idx[-2]), lat_bnds):
-            continue
-        if not _span_overlaps(_chunk_coord(meta, coords, -1, idx[-1]), lon_bnds):
-            continue
-        kept.append(idx)
-    return name, meta, coords, kept, len(idxs)
+            kept.append(idx)
+    return kept, len(grid)
 
 
 def _chunk_coord(meta: ZArrayMeta, coords: dict, d: int, i: int) -> np.ndarray:
     """Coordinate values of grid cell ``i`` along dimension ``d``."""
     c, s = meta.chunks[d], meta.shape[d]
     return coords[meta.dims[d]][i * c : min((i + 1) * c, s)]
+
+
+def chunk_frame(
+    store: str, name: str, meta: ZArrayMeta, coords: dict,
+    idx: tuple[int, ...], preds: dict | None = None,
+    label: str | None = None, t_slab: tuple[int, int] | None = None,
+) -> pd.DataFrame:
+    """One chunk → long form (``label`` or the variable name in
+    ``name``). ``preds`` and the global time-index window ``t_slab``
+    mask the chunk's axes before the mesh exists."""
+    axes = [_chunk_coord(meta, coords, d, i) for d, i in enumerate(idx)]
+    data = _apply_fill(
+        np.asarray(_read_chunk(store, name, idx, meta), dtype=float),
+        meta.attrs,
+    )
+    if preds or t_slab is not None:
+        masks = [axis_mask(a, preds or {}, c) for a, c in zip(axes, _columns(meta))]
+        if t_slab is not None:
+            t = idx[0] * meta.chunks[0] + np.arange(len(axes[0]))
+            masks[0] &= (t >= t_slab[0]) & (t < t_slab[1])
+        axes = [a[m] for a, m in zip(axes, masks)]
+        data = data[np.ix_(*masks)]
+    return _long_form(
+        label or name, pd.DatetimeIndex(axes[0]), axes[-2], axes[-1], data,
+        levs=axes[1] if len(idx) == 4 else None,
+    )
 
 
 def load_zarr(
@@ -1255,11 +1269,13 @@ def load_zarr_parts(
     All parts must share a rank (3-D or 4-D)."""
     if not parts:
         raise ValueError("nothing to load: no stores or variables given")
+    preds = from_bounds(
+        time_bnds=time_bnds, lev_bnds=lev_bnds, lat_bnds=lat_bnds,
+        lon_bnds=lon_bnds,
+    )
     plans, rows = [], []
     for p, (store, var, tag) in enumerate(parts):
-        name, meta, coords, kept, _total = _plan_chunks(
-            store, var, time_bnds, lev_bnds, lat_bnds, lon_bnds
-        )
+        name, meta, coords, kept, _total = _plan_chunks(store, var, preds)
         if plans and len(meta.shape) != len(plans[0][2].shape):
             raise ValueError(
                 f"{store}: {name} is {len(meta.shape)}-D but {plans[0][0]} "
@@ -1293,15 +1309,9 @@ def load_zarr_parts(
             for part, chunk_key in zip(pdf["part"], pdf["chunk"]):
                 store, name, meta, coords, tag = plans[part]
                 idx = tuple(int(x) for x in chunk_key.split(","))
-                data = np.asarray(_read_chunk(store, name, idx, meta), dtype=float)
-                span = functools.partial(_chunk_coord, meta, coords)
-                frame = _long_form(
-                    tag if tag is not None and tag_col == "name" else name,
-                    pd.DatetimeIndex(span(0, idx[0])),
-                    span(-2, idx[-2]),
-                    span(-1, idx[-1]),
-                    _apply_fill(data, meta.attrs),
-                    levs=span(1, idx[1]) if has_lev else None,
+                frame = chunk_frame(
+                    store, name, meta, coords, idx,
+                    label=tag if tag_col == "name" else None,
                 )
                 if tag_col != "name":
                     frame[tag_col] = tag
@@ -1334,7 +1344,11 @@ def pruned_chunk_count(
     observability hook the pruning tests assert on. Pure driver math, no
     Spark session needed."""
     _name, _meta, _coords, kept, total = _plan_chunks(
-        store, var, time_bnds, lev_bnds, lat_bnds, lon_bnds
+        store, var,
+        from_bounds(
+            time_bnds=time_bnds, lev_bnds=lev_bnds, lat_bnds=lat_bnds,
+            lon_bnds=lon_bnds,
+        ),
     )
     return len(kept), total
 

@@ -851,6 +851,70 @@ def test_reduced_gaussian_load_long_form(spark, tmp_path):
     )
 
 
+def _per_point_grid(spark, tmp_path, grid):
+    """A Lambert or reduced-Gaussian file plus load_grib2's (lat, lon,
+    value) rows, unfiltered and under an inclusive lat range."""
+    if grid == "lambert":
+        raw = write_grib2_message(
+            np.arange(35, dtype=float).reshape(5, 7), None, None, _REF,
+            nbits=8, grid_template=30, lambert=_HRRR_LAMBERT,
+        )
+    else:
+        raw, _lats, _vals = _reduced_fixture()
+    (tmp_path / "in").mkdir()
+    (tmp_path / "in" / f"{grid}.grib2").write_bytes(raw)
+    glob = str(tmp_path / "in" / "*.grib2")
+    want = _lat_lon_value(load_grib2(spark, glob))
+    lats = sorted({r[0] for r in want})
+    lo, hi = lats[0], lats[len(lats) // 2]
+    sub = _lat_lon_value(load_grib2(spark, glob, lat_bnds=(lo, hi)))
+    assert 0 < len(sub) < len(want)
+    return glob, want, sub, (F.col("lat") >= lo) & (F.col("lat") <= hi)
+
+
+def _lat_lon_value(df):
+    return sorted(map(tuple, df.select("lat", "lon", "value").collect()))
+
+
+@pytest.mark.parametrize("grid", ["lambert", "reduced"])
+def test_dsv2_grib2_matches_load_grib2_on_per_point_grids(
+    spark, tmp_path, grid
+):
+    """format('grib2') emits load_grib2's per-point degrees and values
+    on a projected (Lambert) and a reduced-Gaussian grid, unfiltered
+    and under a pushed lat range."""
+    from bcdp_spark.sources.grib2_datasource import register_grib2_source
+
+    glob, want, sub, in_range = _per_point_grid(spark, tmp_path, grid)
+    register_grib2_source(spark)
+    dsv2 = spark.read.format("grib2").load(glob)
+    assert _lat_lon_value(dsv2) == want
+    assert _lat_lon_value(dsv2.filter(in_range)) == sub
+
+
+@pytest.mark.parametrize("grid", ["lambert", "reduced"])
+def test_grib2_stream_matches_load_grib2_on_per_point_grids(
+    spark, tmp_path, grid
+):
+    """format('grib2-stream') emits load_grib2's per-point rows on a
+    projected (Lambert) and a reduced-Gaussian grid, unfiltered and
+    under the same lat range applied post-stream."""
+    from bcdp_spark.sources.grib2 import register_grib2_stream_source
+
+    glob, want, sub, in_range = _per_point_grid(spark, tmp_path, grid)
+    register_grib2_stream_source(spark)
+    out = str(tmp_path / "out")
+    (
+        spark.readStream.format("grib2-stream").option("path", glob).load()
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start().awaitTermination()
+    )
+    streamed = spark.read.parquet(out)
+    assert _lat_lon_value(streamed) == want
+    assert _lat_lon_value(streamed.filter(in_range)) == sub
+
+
 def test_reduced_regional_and_bad_interpretation_raise():
     pl = (4, 8, 12, 12, 8, 4)
     raw, _, _ = _reduced_fixture(pl)

@@ -450,6 +450,26 @@ def test_load_netcdf_4d_emits_lev_column(spark, tmp_path):
     )
 
 
+def test_netcdf_datasource_4d_emits_lev_column(spark, tmp_path):
+    """format('netcdf') on a 4-D (time, lev, lat, lon) variable declares
+    the 6-column long form and returns load_netcdf's rows."""
+    from bcdp_spark.sources.netcdf import load_netcdf
+    from bcdp_spark.sources.netcdf_datasource import register_netcdf_source
+
+    _write_4d_fixture(tmp_path, fill_at=7)
+    register_netcdf_source(spark)
+    a = spark.read.format("netcdf").load(str(tmp_path / "*.nc"))
+    b = load_netcdf(spark, str(tmp_path / "*.nc"))
+    assert a.columns == ["name", "time", "lev", "lat", "lon", "value"]
+    pa, pb = a.toPandas(), b.toPandas()
+    key = ["time", "lev", "lat", "lon"]
+    pd.testing.assert_frame_equal(
+        pa.sort_values(key).reset_index(drop=True),
+        pb.sort_values(key).reset_index(drop=True),
+    )
+    assert len(pa) == 3 * 2 * 2 * 3
+
+
 def test_ensemble_lev_subset_and_4d_roundtrip(spark, tmp_path):
     """Bounds(lev_bnds=…) filters the vertical axis; to_netcdf writes the
     4-D grid back and load_netcdf reingests it identically."""
@@ -516,19 +536,121 @@ def test_to_netcdf_export_roundtrip(spark, tmp_path):
 
 
 # ------------------------------------------- Python DataSource (V2)
-def test_netcdf_datasource_matches_mapinpandas_loader(spark, tmp_path):
-    """format('netcdf') must produce exactly the rows load_netcdf does."""
+def _parity_source(kind: str, tmp_path):
+    """(format name, path, loader(bounds kwargs) -> DataFrame) for one
+    gridded fixture."""
+    from bcdp_spark.sources.geotiff import load_geotiff, write_geotiff
+    from bcdp_spark.sources.grib2 import load_grib2
+    from bcdp_spark.sources.hdf5 import write_hdf5
     from bcdp_spark.sources.netcdf import load_netcdf
-    from bcdp_spark.sources.netcdf_datasource import register_netcdf_source
+    from bcdp_spark.sources.zarr import load_zarr, write_zarr
 
-    _write_fixture(tmp_path)
-    register_netcdf_source(spark)
-    a = spark.read.format("netcdf").load(str(tmp_path / "*.nc"))
-    b = load_netcdf(spark, str(tmp_path / "*.nc"))
-    key = ["name", "time", "lat", "lon"]
-    ra = sorted(map(tuple, a.select(*key, "value").collect()))
-    rb = sorted(map(tuple, b.select(*key, "value").collect()))
-    assert len(ra) == 72 and ra == rb
+    t = np.arange(12)[:, None, None]
+    a = np.arange(3)[None, :, None]
+    o = np.arange(4)[None, None, :]
+    cube = 1.0 * (t * 100 + a * 10 + o)
+    lats, lons = np.array([-30.0, 0.0, 30.0]), np.arange(4) * 90.0
+    time = (["time"], np.arange(12.0), {"units": "days since 2001-01-01"})
+    if kind == "netcdf-classic":
+        _write_fixture(tmp_path)
+        path = str(tmp_path / "*.nc")
+        return "netcdf", path, lambda spark, **b: load_netcdf(spark, path, **b)
+    if kind == "netcdf-hdf5":
+        path = str(tmp_path / "chunked.nc")
+        with open(path, "wb") as fh:
+            fh.write(write_hdf5(
+                {"time": time, "lat": (["lat"], lats, {}),
+                 "lon": (["lon"], lons, {}),
+                 "pr": (["time", "lat", "lon"], cube, {})},
+                chunk={"pr": (5, 3, 4)}, gzip_level=4,
+            ))
+        return "netcdf", path, lambda spark, **b: load_netcdf(spark, path, **b)
+    if kind.startswith("zarr"):
+        path = str(tmp_path / "s.zarr")
+        variables = {"time": time, "lat": (["lat"], lats, {}),
+                     "lon": (["lon"], lons, {})}
+        if kind == "zarr-3d":
+            variables["pr"] = (["time", "lat", "lon"], cube, {})
+            chunks = {"pr": (5, 2, 3)}
+        else:
+            variables["lev"] = (["lev"], np.array([850.0, 500.0]), {})
+            variables["ta"] = (
+                ["time", "lev", "lat", "lon"],
+                np.stack([cube, cube + 0.5], axis=1), {},
+            )
+            chunks = {"ta": (5, 1, 2, 3)}
+        dims = {"time": 12, "lat": 3, "lon": 4}
+        if "lev" in variables:
+            dims["lev"] = 2
+        write_zarr(path, dims=dims, variables=variables, chunks=chunks)
+        return "zarr", path, lambda spark, **b: load_zarr(spark, path, **b)
+    if kind == "grib2":
+        from tests.test_grib2 import _write_fixture as _write_grib2
+
+        path = _write_grib2(str(tmp_path))
+        return "grib2", path, lambda spark, **b: load_grib2(spark, path, **b)
+    rotation = (0.5, 0.25) if kind == "geotiff-rotated" else None
+    for nm in ("a", "b"):
+        (tmp_path / f"{nm}.tif").write_bytes(write_geotiff(
+            cube[:8].reshape(8, 12) + (nm == "b"), lat0=50.0, lon0=10.0,
+            dlat=1.0, dlon=1.0, rows_per_strip=3, rotation=rotation,
+        ))
+    path = str(tmp_path / "*.tif")
+    return "geotiff", path, lambda spark, **b: load_geotiff(spark, path, **b)
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["netcdf-classic", "netcdf-hdf5", "zarr-3d", "zarr-4d", "grib2",
+     "geotiff-regular", "geotiff-rotated"],
+)
+def test_netcdf_datasource_matches_mapinpandas_loader(spark, tmp_path, kind):
+    """format(...) must produce exactly the rows its load_* loader does:
+    unfiltered, and under each pushed =, <, <=, >, >= lat filter versus
+    the loader's equivalent inclusive bounds plus the same post-filter."""
+    import operator
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from bcdp_spark.sources.geotiff_datasource import register_geotiff_source
+    from bcdp_spark.sources.grib2_datasource import register_grib2_source
+    from bcdp_spark.sources.netcdf_datasource import register_netcdf_source
+    from bcdp_spark.sources.zarr_datasource import register_zarr_source
+
+    for register in (register_netcdf_source, register_zarr_source,
+                     register_grib2_source, register_geotiff_source):
+        register(spark)
+    fmt, path, load = _parity_source(kind, tmp_path)
+
+    def rows(df):
+        pdf = df.toPandas()
+        return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+    full = rows(spark.read.format(fmt).load(path))
+    pd.testing.assert_frame_equal(full, rows(load(spark)))
+    lat = sorted(full["lat"].unique())[len(full["lat"].unique()) // 2]
+    inf = float("inf")
+    for op, bnds in (
+        (operator.eq, (lat, lat)), (operator.lt, (-inf, lat)),
+        (operator.le, (-inf, lat)), (operator.gt, (lat, inf)),
+        (operator.ge, (lat, inf)),
+    ):
+        cond = op(F.col("lat"), F.lit(float(lat)))
+        got = rows(spark.read.format(fmt).load(path).filter(cond))
+        want = rows(load(spark, lat_bnds=bnds).filter(cond))
+        assert 0 < len(got) < len(full)
+        pd.testing.assert_frame_equal(got, want, obj=f"{kind} lat {op.__name__}")
+
+
+def test_load_netcdf_open_ended_bounds(spark, tmp_path):
+    """A None endpoint leaves that side of a *_bnds range open."""
+    from bcdp_spark.sources.netcdf import load_netcdf
+
+    _write_fixture(tmp_path)  # 8 times x lats (-45, 0, 45) x 3 lons
+    path = str(tmp_path / "*.nc")
+    assert load_netcdf(spark, path, lat_bnds=(0.0, None)).count() == 48
+    assert load_netcdf(spark, path, lat_bnds=(None, 0.0)).count() == 48
 
 
 def test_netcdf_datasource_hyperslab_pushdown(spark, tmp_path):
@@ -722,6 +844,10 @@ def test_load_netcdf_vars_multi_variable(spark, tmp_path):
     assert sorted(pdf.name.unique()) == ["pr", "tas"]
     assert len(pdf) == 24
     assert pdf[pdf.name == "tas"].value.sum() == 3 * pdf[pdf.name == "pr"].value.sum()
+    # one (path, var) manifest decoded by one mapInPandas: no Union
+    df = load_netcdf_vars(spark, str(tmp_path / "*.nc"), ["pr", "tas"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan and plan.count("MapInPandas") == 1
 
 
 def test_netcdf3_single_short_record_var_unpadded(spark, tmp_path):

@@ -516,3 +516,25 @@ def test_every_registry_key_has_a_plan_dump():
         f"{len(missing)} registry keys lack plan dumps: {missing[:10]} — "
         "run `python tools/dump_plans.py " + " ".join(missing[:10]) + "`"
     )
+
+
+def test_dump_plans_check_normalizes_run_specific_ids():
+    """`tools/dump_plans.py --check` compares plans modulo what differs
+    between two runs of one plan — expression IDs, exchange plan ids,
+    lambda-variable counters — and nothing else."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "dump_plans.py",
+    )
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    a = ("Output [2]: [id#3048L, lat#12]\nArguments: hashpartitioning(lat#12, 8), "
+         "[plan_id=5265]\naggregate(v#7, 0.0, lambdafunction((lambda x_222#9)))")
+    b = ("Output [2]: [id#17L, lat#3]\nArguments: hashpartitioning(lat#3, 8), "
+         "[plan_id=12]\naggregate(v#1, 0.0, lambdafunction((lambda x_3#2)))")
+    assert mod.normalize(a) == mod.normalize(b)
+    assert mod.normalize(a) != mod.normalize(b.replace("8)", "16)"))

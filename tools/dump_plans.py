@@ -1,10 +1,18 @@
 """Dump formatted physical plans for the headline queries into
 docs/plans/ — reviewable evidence that each query gets the plan it was
-designed for (pushdown, broadcast, codegen; SURVEY.md §4)."""
+designed for (pushdown, broadcast, codegen; SURVEY.md §4).
+
+    python tools/dump_plans.py [KEY...]          # (re)write the dumps
+    python tools/dump_plans.py --check KEY...    # compare, write nothing
+
+KEY may be a shell-style pattern (quote it: ``'q_zarr_*'``)."""
 
 from __future__ import annotations
 
+import difflib
+import fnmatch
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -144,27 +152,68 @@ HEADLINE = (
 )
 
 
+def normalize(plan: str) -> str:
+    """Drop what differs between two runs of the same plan: expression
+    IDs (``#123``), exchange plan ids (``plan_id=45``) and the
+    session-wide counter in lambda variable names (``lambda x_222``)."""
+    plan = re.sub(r"#\d+L?", "#N", plan)
+    plan = re.sub(r"(lambda \w+?)_\d+", r"\1_N", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
+
+
 def main() -> None:
     """Dump EVERY registry key (r9, VERDICT r8 item 4 — the curated
     HEADLINE list above is kept as the reviewed-by-hand core, but the
     dump now covers the whole surface so a new key cannot ship without
     plan evidence; tests/test_plans.py asserts the directory is
-    complete against queries())."""
+    complete against queries()).
+
+    ``--check KEY...`` writes nothing: it re-plans the named keys
+    (shell-style patterns such as ``'q_zarr_*'`` allowed), compares
+    each with its committed ``docs/plans/KEY.txt`` after
+    ``normalize``, prints a unified diff per mismatch and exits 1 on
+    any difference or unmatched pattern."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "plans")
+    args = sys.argv[1:]
+    check = bool(args) and args[0] == "--check"
+    if check:
+        args = args[1:]
+        if not args:
+            sys.exit("usage: dump_plans.py --check KEY...")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_plans", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
-    only = set(sys.argv[1:])  # optional: dump just the named keys
     registry = q.queries()
     keys = list(HEADLINE) + [k for k in registry if k not in HEADLINE]
+    if args:  # optional: just the named keys / patterns
+        unmatched = [a for a in args if not fnmatch.filter(keys, a)]
+        if unmatched:
+            sys.exit(f"no registry key matches {unmatched}")
+        keys = [k for k in keys if any(fnmatch.fnmatchcase(k, a) for a in args)]
+    failed = []
     for key in keys:
-        if only and key not in only:
+        plan = formatted(registry[key](spark, sf_dir))
+        path = os.path.join(out_dir, f"{key}.txt")
+        if not check:
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"wrote docs/plans/{key}.txt")
             continue
-        df = registry[key](spark, sf_dir)
-        with open(os.path.join(out_dir, f"{key}.txt"), "w") as f:
-            f.write(formatted(df))
-        print(f"wrote docs/plans/{key}.txt")
+        with open(path) as f:
+            want = normalize(f.read())
+        got = normalize(plan)
+        if got == want:
+            print(f"same    {key}")
+            continue
+        failed.append(key)
+        print(f"DIFFERS {key}")
+        sys.stdout.writelines(difflib.unified_diff(
+            want.splitlines(keepends=True), got.splitlines(keepends=True),
+            f"docs/plans/{key}.txt", f"{key} (fresh)",
+        ))
+    if failed:
+        sys.exit(f"{len(failed)} of {len(keys)} plans differ: {failed}")
 
 
 if __name__ == "__main__":
