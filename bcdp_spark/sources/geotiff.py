@@ -177,9 +177,10 @@ class TiffMeta:
         return (min(lats), max(lats), min(lons), max(lons))
 
     def pixel_latlon(self, r0: int, c0: int, n_r: int, n_c: int):
-        """2-D pixel-center (lat, lon) grids for a block window —
-        the general affine; callers on the axis-aligned fast path use
-        separable 1-D vectors instead."""
+        """2-D pixel-center (lat, lon) grids for a block window — the
+        general affine, used for axis-aligned and rotated blocks alike
+        (the zero cross terms leave axis-aligned coordinates unchanged),
+        so both share one mask."""
         rr = (r0 + np.arange(n_r, dtype="f8"))[:, None]
         cc = (c0 + np.arange(n_c, dtype="f8"))[None, :]
         lat = self.lat0 - rr * self.dlat + cc * self.yc

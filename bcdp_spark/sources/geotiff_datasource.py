@@ -82,17 +82,18 @@ class GeoTiffDataSource(DataSource):
         return _SCHEMA
 
     def reader(self, schema: StructType) -> "GeoTiffReader":
-        return GeoTiffReader(self.options)
+        return GeoTiffReader(self.options, schema)
 
 
 class GeoTiffReader(DataSourceReader):
-    def __init__(self, options):
+    def __init__(self, options, schema: StructType | None = None):
         path = options.get("path")
         if not path:
             raise ValueError("geotiff source requires a path glob")
         self._glob = path
         ov = options.get("overview")
         self._overview = None if ov is None else int(ov)
+        self._schema = schema  # the declared schema read() batches follow
         self._filters: list[Filter] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -139,7 +140,7 @@ class GeoTiffReader(DataSourceReader):
             self._parse(partition.path), partition.block, payload,
             from_filters(self._filters), _stem(partition.path),
         ):
-            yield arrow_batch(frame)
+            yield arrow_batch(frame, self._schema)
 
 
 def register_geotiff_source(spark) -> None:

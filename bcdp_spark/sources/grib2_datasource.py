@@ -69,15 +69,16 @@ class Grib2DataSource(DataSource):
         return _SCHEMA
 
     def reader(self, schema: StructType) -> "Grib2Reader":
-        return Grib2Reader(self.options)
+        return Grib2Reader(self.options, schema)
 
 
 class Grib2Reader(DataSourceReader):
-    def __init__(self, options):
+    def __init__(self, options, schema: StructType | None = None):
         path = options.get("path")
         if not path:
             raise ValueError("grib2 source requires a path glob")
         self._glob = path
+        self._schema = schema  # the declared schema read() batches follow
         self._filters: list[Filter] = []
         self._index = None
 
@@ -121,7 +122,7 @@ class Grib2Reader(DataSourceReader):
         yield arrow_batch(message_frame(
             partition.path, partition.offset, partition.length,
             partition.field, from_filters(self._filters),
-        ))
+        ), self._schema)
 
 
 def register_grib2_source(spark) -> None:

@@ -14,10 +14,11 @@ tz-naive UTC time axes.
 Two tests use ``preds``:
 
 - ``axis_mask`` — the exact per-value mask over a coordinate array
-  (any shape), applied before the long-form mesh exists;
+  (any shape), applied before the long-form mesh exists; a Zarr
+  planner drops a chunk when it is empty along some dimension;
 - ``span_may_match`` — the corner-only test a planner uses to drop a
-  chunk, message or block whose coordinate span ``[lo, hi]`` cannot
-  hold a matching value.
+  GRIB2 message or GeoTIFF block whose coordinate bounding box
+  ``[lo, hi]`` (it has only corners) cannot hold a matching value.
 
 The module also holds the two output adapters shared by the DSv2 and
 stream readers: long-form frame → Arrow batch, and long-form frame →
@@ -128,28 +129,23 @@ def span_may_match(lo, hi, preds: dict, col: str) -> bool:
 
 # -- output adapters ------------------------------------------------------
 
-_ARROW_TYPES = {
-    "name": "string", "file": "string", "ens_label": "string",
-    "time": "timestamp[us]", "band": "int32", "member": "int32",
-    "level_type": "int32",
-}
-
-
-def arrow_batch(frame: pd.DataFrame):
-    """Long-form frame → the Arrow batch a DSv2 ``read()`` yields
-    (columns in frame order; NaN values become NULL)."""
+def arrow_batch(frame: pd.DataFrame, schema):
+    """Long-form frame → the Arrow batch a DSv2 ``read()`` yields, typed
+    and ordered by the reader's declared ``schema`` (a ``StructType``;
+    NaN values become NULL, timestamps stay tz-naive UTC wall times)."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     return pa.RecordBatch.from_arrays(
         [
             pa.array(
-                frame[c],
-                type=pa.type_for_alias(_ARROW_TYPES.get(c, "double")),
+                frame[f.name],
+                type=to_arrow_type(f.dataType, timestamp_utc=False),
                 from_pandas=True,
             )
-            for c in frame.columns
+            for f in schema.fields
         ],
-        names=list(frame.columns),
+        names=schema.names,
     )
 
 

@@ -668,7 +668,16 @@ def load_netcdf_vars(
     if not variables:
         raise ValueError("variables must be a non-empty list")
     files = _files(path)
-    schema = _long_form_schema(files, variables[0])
+    # header peeks on the driver: a rank mismatch fails here, naming
+    # the variables, not later inside a task
+    schemas = [_long_form_schema(files, v) for v in variables]
+    for v, s in zip(variables, schemas):
+        if len(s) != len(schemas[0]):  # 5 columns 3-D, 6 columns 4-D
+            raise ValueError(
+                f"{path}: {v} is {len(s) - 2}-D but {variables[0]} is "
+                f"{len(schemas[0]) - 2}-D; one load needs one rank"
+            )
+    schema = schemas[0]
     if var_col != "name":
         schema = T.StructType([*schema.fields]).add(var_col, "string")
     from bcdp_spark.sources.manifest import spread_manifest

@@ -80,16 +80,17 @@ class NetCDFDataSource(DataSource):
         return _long_form_schema(files, self.options.get("var"))
 
     def reader(self, schema: StructType) -> "NetCDFReader":
-        return NetCDFReader(self.options)
+        return NetCDFReader(self.options, schema)
 
 
 class NetCDFReader(DataSourceReader):
-    def __init__(self, options):
+    def __init__(self, options, schema: StructType | None = None):
         path = options.get("path")
         if not path:
             raise ValueError("netcdf source requires a path")
         self._glob = path
         self._var = options.get("var")
+        self._schema = schema  # the declared schema read() batches follow
         self._filters: list[Filter] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -115,7 +116,7 @@ class NetCDFReader(DataSourceReader):
         slab = None if partition.t0 < 0 else (partition.t0, partition.t1)
         yield arrow_batch(_decode_one(
             partition.path, self._var, from_filters(self._filters), slab
-        ))
+        ), self._schema)
 
 
 def register_netcdf_source(spark) -> None:

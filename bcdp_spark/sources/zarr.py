@@ -45,7 +45,7 @@ from pyspark.sql import functions as F, types as T
 
 from bcdp_spark.sources import codecs
 from bcdp_spark.sources.blosc import CNAMES as _BLOSC_CNAMES
-from bcdp_spark.sources.hyperslab import axis_mask, from_bounds, span_may_match
+from bcdp_spark.sources.hyperslab import axis_mask, from_bounds
 from bcdp_spark.sources.netcdf import (
     LONG_FORM_SCHEMA,
     LONG_FORM_SCHEMA_4D,
@@ -1192,17 +1192,17 @@ def _plan_chunks(store: str, var: str | None, preds: dict):
 
 
 def _kept_chunks(meta: ZArrayMeta, coords: dict, preds: dict):
-    """(kept grid indices, total chunk count): a chunk is kept when
-    every column's coordinate span may satisfy ``preds``
-    (``hyperslab.span_may_match`` — a chunk's span is a closed form of
-    its grid index)."""
+    """(kept grid indices, total chunk count): a chunk is kept when,
+    along every dimension, some coordinate value in it satisfies
+    ``preds`` (the exact ``hyperslab.axis_mask`` — a chunk's coordinate
+    values are a closed form of its grid index)."""
     grid = _chunk_grid(meta)
     cols = _columns(meta)
     kept = []
     for idx in grid:
         spans = (_chunk_coord(meta, coords, d, i) for d, i in enumerate(idx))
         if all(
-            len(v) == 0 or span_may_match(v.min(), v.max(), preds, col)
+            len(v) == 0 or axis_mask(v, preds, col).any()
             for v, col in zip(spans, cols)
         ):
             kept.append(idx)
@@ -1319,16 +1319,24 @@ def load_zarr_parts(
 
     df = manifest.mapInPandas(decode, schema=schema)
     # exact bounds re-applied in-plan (pruning is an optimization only);
-    # time bounds are string literals cast under the SESSION timezone —
-    # a naive Python datetime would convert through the HOST zone
-    # (TimestampType.toInternal uses local mktime) and silently shift
-    # the bound on any non-UTC box
+    # a None endpoint leaves that side open. Time bounds are string
+    # literals cast under the SESSION timezone — a naive Python datetime
+    # would convert through the HOST zone (TimestampType.toInternal uses
+    # local mktime) and silently shift the bound on any non-UTC box
     if time_bnds is not None:
-        time_bnds = [F.lit(str(pd.Timestamp(t))).cast("timestamp") for t in time_bnds]
+        time_bnds = [
+            None if t is None else F.lit(str(pd.Timestamp(t))).cast("timestamp")
+            for t in time_bnds
+        ]
     for col, bnds in (("time", time_bnds), ("lev", lev_bnds if has_lev else None),
                       ("lat", lat_bnds), ("lon", lon_bnds)):
-        if bnds is not None:
-            df = df.filter(df[col].between(*bnds))
+        lo, hi = bnds if bnds is not None else (None, None)
+        if lo is not None and hi is not None:
+            df = df.filter(df[col].between(lo, hi))
+        elif lo is not None:
+            df = df.filter(df[col] >= lo)
+        elif hi is not None:
+            df = df.filter(df[col] <= hi)
     return df
 
 

@@ -74,16 +74,17 @@ class ZarrDataSource(DataSource):
         return _schema(self.options, "zarr")
 
     def reader(self, schema: StructType) -> "ZarrReader":
-        return ZarrReader(self.options)
+        return ZarrReader(self.options, schema)
 
 
 class ZarrReader(DataSourceReader):
-    def __init__(self, options):
+    def __init__(self, options, schema: StructType | None = None):
         store = options.get("path")
         if not store:
             raise ValueError("zarr source requires a path")
         self._store = store
         self._var = options.get("var")
+        self._schema = schema  # the declared schema read() batches follow
         self._filters: list[Filter] = []
         self._planned = None
 
@@ -115,7 +116,7 @@ class ZarrReader(DataSourceReader):
         yield arrow_batch(chunk_frame(
             self._store, name, meta, coords, tuple(partition.idx),
             from_filters(self._filters),
-        ))
+        ), self._schema)
 
 
 def register_zarr_source(spark) -> None:

@@ -645,12 +645,23 @@ def test_netcdf_datasource_matches_mapinpandas_loader(spark, tmp_path, kind):
 
 def test_load_netcdf_open_ended_bounds(spark, tmp_path):
     """A None endpoint leaves that side of a *_bnds range open."""
+    import pandas as pd
+
     from bcdp_spark.sources.netcdf import load_netcdf
 
     _write_fixture(tmp_path)  # 8 times x lats (-45, 0, 45) x 3 lons
     path = str(tmp_path / "*.nc")
     assert load_netcdf(spark, path, lat_bnds=(0.0, None)).count() == 48
     assert load_netcdf(spark, path, lat_bnds=(None, 0.0)).count() == 48
+    # Zarr re-applies its bounds in-plan: an open end must not turn
+    # into a NULL comparison that filters every row out
+    _fmt, _path, load_zarr = _parity_source("zarr-3d", tmp_path)
+    north = load_zarr(spark, lat_bnds=(0.0, None)).toPandas()
+    assert sorted(north.lat.unique()) == [0.0, 30.0]
+    assert len(north) == 12 * 2 * 4  # 12 times x lats (0, 30) x 4 lons
+    early = load_zarr(spark, time_bnds=(None, "2001-01-06")).toPandas()
+    assert len(early) == 6 * 3 * 4  # days 0-5
+    assert early.time.max() == pd.Timestamp("2001-01-06")
 
 
 def test_netcdf_datasource_hyperslab_pushdown(spark, tmp_path):
@@ -848,6 +859,30 @@ def test_load_netcdf_vars_multi_variable(spark, tmp_path):
     df = load_netcdf_vars(spark, str(tmp_path / "*.nc"), ["pr", "tas"])
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan and plan.count("MapInPandas") == 1
+
+
+def test_load_netcdf_vars_rejects_mixed_ranks(spark, tmp_path):
+    """A 3-D and a 4-D variable cannot share one long form: the load
+    fails on the driver and names both variables."""
+    from bcdp_spark.sources.netcdf import load_netcdf_vars
+    from bcdp_spark.sources.netcdf3 import write_netcdf3
+
+    raw = write_netcdf3(
+        dims={"time": 2, "lev": 2, "lat": 2, "lon": 2},
+        variables={
+            "time": (["time"], np.arange(2.0),
+                     {"units": "days since 2001-01-01"}),
+            "lev": (["lev"], np.array([850.0, 500.0]), {}),
+            "lat": (["lat"], np.array([-10.0, 10.0]), {}),
+            "lon": (["lon"], np.array([0.0, 90.0]), {}),
+            "pr": (["time", "lat", "lon"], np.zeros((2, 2, 2)), {}),
+            "ta": (["time", "lev", "lat", "lon"], np.zeros((2, 2, 2, 2)), {}),
+        },
+        record_dim="time",
+    )
+    (tmp_path / "m.nc").write_bytes(raw)
+    with pytest.raises(ValueError, match="ta is 4-D but pr is 3-D"):
+        load_netcdf_vars(spark, str(tmp_path / "*.nc"), ["pr", "ta"])
 
 
 def test_netcdf3_single_short_record_var_unpadded(spark, tmp_path):

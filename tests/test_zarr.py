@@ -615,6 +615,34 @@ def test_zarr_v3_unsupported_codec_raises(tmp_path):
         read_array_meta(store, "v")
 
 
+def test_zarr_datasource_plans_only_chunks_holding_a_match(tmp_path):
+    """A chunk is planned only when some coordinate value in it matches
+    every pushed predicate: an `=` literal, or a two-sided range, that
+    falls between two coordinate values of one chunk plans nothing."""
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThanOrEqual,
+        LessThanOrEqual,
+    )
+
+    from bcdp_spark.sources.zarr_datasource import ZarrReader
+
+    store, _ = _write_store(tmp_path)  # lat chunks (-60, -20), (20, 60)
+
+    def planned(*filters):
+        r = ZarrReader({"path": store})
+        r._filters = list(filters)
+        return len(r.partitions())
+
+    assert planned() == 12  # 3 time x 2 lat x 2 lon chunks
+    assert planned(EqualTo(("lat",), -20.0)) == 6
+    assert planned(EqualTo(("lat",), -40.0)) == 0
+    assert planned(
+        GreaterThanOrEqual(("lat",), -50.0), LessThanOrEqual(("lat",), -30.0)
+    ) == 0
+    assert pruned_chunk_count(store, lat_bnds=(-50.0, -30.0)) == (0, 12)
+
+
 def test_q_zarr_climatology_uses_dsv2_pushdown(spark):
     """Plan gate for the graded key's r4 re-route: the lat>=0 range
     predicate must be CONSUMED by pushFilters (absent from any residual
