@@ -14,18 +14,21 @@ one row per partition, and the manifest values ride the plan as literal
 arrays indexed by the range id. Determinism: callers sort their file
 lists first (they always did); slice i holds row i.
 
-Per-task cost and packing: every Python task pays a fixed worker cost,
-about 0.2 CPU s on Spark 4.1 / CPython 3.11, whatever it decodes.
-pyspark's per-task ``setup_spark_files`` calls
-``importlib.invalidate_caches()``, which on CPython 3.11 re-reads the
-``pyspark.zip`` directory once per cached zip importer (16 in a
-worker). Decoding a small chunk costs milliseconds, so one task per
-chunk is mostly overhead. ``slices`` packs the manifest into fewer
-partitions of contiguous rows: the Zarr loader uses
-``min(n, defaultParallelism)``, one task per slot. The trade-off at
-scale is fewer, larger retry units — a failed or straggling task
-redoes its whole slice. The other loaders still spread one file per
-task.
+Per-task cost and packing: pyspark's per-task ``setup_spark_files``
+calls ``importlib.invalidate_caches()``, which on CPython 3.11 re-reads
+every cached importer of Spark's worker archives: 16 importers across
+``pyspark.zip``, the py4j source zip and the spark-core jar, ~0.2 s
+per task whatever the task decodes. ``session.get_spark`` runs the
+workers under ``bcdp_spark._daemon``, which imports pyspark from its
+installed directory and drops the archives, so the call costs ~0.1 ms
+(it falls back to plain ``pyspark.daemon`` when the installed pyspark
+is missing or a different version). ``slices`` packs the manifest into
+fewer partitions of contiguous rows: the Zarr loader uses
+``min(n, defaultParallelism)``, one task per slot, because its units
+are chunks that decode in milliseconds. The trade-off at scale is
+fewer, larger retry units — a failed or straggling task redoes its
+whole slice. The other loaders spread one file per task; docs/SCALE.md
+gives the measured per-task cost that decides this.
 
 Scale note (100 TB): manifests here are file/chunk lists (thousands of
 entries); both the old LocalRelation and these literals live in the

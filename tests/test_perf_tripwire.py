@@ -8,14 +8,18 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
+import perf_tripwire
 from perf_tripwire import (
     THRESHOLD,
     _fresh_entries,
     _normalize_plan,
     _warm_entries,
     flag_regressions,
+    tag_mismatches,
     warn_warm_drift,
 )
 
@@ -136,28 +140,34 @@ def test_warm_drift_is_two_sided_and_skips_missing():
     assert set(drifted) == {"a"}
 
 
-def test_fresh_entries_exec_twin_bridges_timer_change():
-    """r13: when the current payload times construct+exec but the
-    committed baseline predates the change, the gate must compare the
-    exec-only twin — otherwise every key 'regresses' by its own
-    construction time."""
-    payload = {
+def test_tag_mismatch_fails_and_names_both_tags(monkeypatch, tmp_path, capsys):
+    """A baseline whose fresh timer or sf10 protocol differs from the
+    current payload's is not comparable: the tripwire exits non-zero and
+    names both tags instead of switching what it compares."""
+    base = {
         "fresh_timer": "construct+exec",
-        "queries_fresh": {"q_a": 1.2},        # includes 0.9 construction
-        "queries_fresh_exec": {"q_a": 0.3},
-        "sf1": {
-            "queries_fresh": {"q_a": 2.0},
-            "queries_fresh_exec": {"q_a": 1.1},
-        },
-        "sf10": {"queries": {"q_big": 5.0}},
+        "queries_fresh": {"q_a": 1.0},
+        "sf10": {"queries": {"q_big": 5.0}, "protocol": "fresh-jvm-per-key"},
     }
-    headline = _fresh_entries(payload)
-    twin = _fresh_entries(payload, exec_twin=True)
-    assert headline == {"sf0.1:q_a": 1.2, "sf1:q_a": 2.0, "sf10:q_big": 5.0}
-    assert twin == {"sf0.1:q_a": 0.3, "sf1:q_a": 1.1, "sf10:q_big": 5.0}
-    # a payload without twins (pre-r13 baseline) is unaffected by the flag
-    old = {"queries_fresh": {"q_a": 0.31}}
-    assert _fresh_entries(old, exec_twin=True) == {"sf0.1:q_a": 0.31}
+    assert tag_mismatches(base, dict(base)) == []
+    no_leg = {k: v for k, v in base.items() if k != "sf10"}
+    assert tag_mismatches(no_leg, base) == []  # SPARK_GRAFT_BENCH_SF10=0
+    cur = dict(base, fresh_timer="exec", sf10=dict(base["sf10"], protocol="in-session"))
+    assert tag_mismatches(cur, base) == [
+        "fresh_timer: baseline 'construct+exec', current 'exec'",
+        "sf10.protocol: baseline 'fresh-jvm-per-key', current 'in-session'",
+    ]
+
+    bench_line = tmp_path / "bench.json"
+    bench_line.write_text(json.dumps(cur) + "\n")
+    monkeypatch.setattr(perf_tripwire, "_latest_bench", lambda: ("BENCH_r99.json", base))
+    monkeypatch.setattr(sys, "argv", ["perf_tripwire.py", str(bench_line)])
+    with pytest.raises(SystemExit) as exit_info:
+        perf_tripwire.main()
+    assert exit_info.value.code == 1
+    out = capsys.readouterr().out
+    assert "'construct+exec'" in out and "'exec'" in out
+    assert "'fresh-jvm-per-key'" in out and "'in-session'" in out
 
 
 def test_sf10_leg_parses_json_lines_not_a_prefix():

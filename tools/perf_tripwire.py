@@ -78,32 +78,32 @@ def _latest_bench() -> tuple[str, dict] | None:
     return path, payload
 
 
-def _fresh_entries(payload: dict, exec_twin: bool = False) -> dict[str, float]:
+def _fresh_entries(payload: dict) -> dict[str, float]:
     """Flatten every fresh-plan number in a bench payload to
     {scale:key: seconds}. Warm numbers are deliberately excluded —
-    they are the stage-reuse metric this tripwire exists to replace.
-
-    exec_twin=True reads the exec-only twin ("queries_fresh_exec", the
-    pre-r13 timer placement) where present — used to compare a
-    construct+exec payload like-for-like against a baseline recorded
-    before the r13 timer change (detected via the "fresh_timer"
-    marker). Falls back to the headline numbers when a twin is absent."""
-    def pick(d: dict) -> dict:
-        if exec_twin and d.get("queries_fresh_exec") is not None:
-            return d["queries_fresh_exec"]
-        return d.get("queries_fresh") or {}
-
+    they are the stage-reuse metric this tripwire exists to replace."""
     out: dict[str, float] = {}
-    for key, sec in pick(payload).items():
+    for key, sec in (payload.get("queries_fresh") or {}).items():
         out[f"sf0.1:{key}"] = sec
     for scale in ("sf1", "sf10"):
         leg = payload.get(scale) or {}
-        fresh = pick(leg) or None
+        fresh = leg.get("queries_fresh") or None
         if fresh is None and scale == "sf10":
             fresh = leg.get("queries")  # sf10's headline IS fresh-plan
         for key, sec in (fresh or {}).items():
             out[f"{scale}:{key}"] = sec
     return out
+
+
+def tag_mismatches(current: dict, prev: dict) -> list[str]:
+    """One line per measurement tag that differs between two bench
+    payloads. Payloads whose tags differ measure different things, so
+    the gate refuses to compare them."""
+    tags = [("fresh_timer", current.get("fresh_timer"), prev.get("fresh_timer"))]
+    cur_leg, prev_leg = current.get("sf10"), prev.get("sf10")
+    if cur_leg and prev_leg:  # a run without the sf10 leg gates no sf10 entry
+        tags.append(("sf10.protocol", cur_leg.get("protocol"), prev_leg.get("protocol")))
+    return [f"{name}: baseline {p!r}, current {c!r}" for name, c, p in tags if c != p]
 
 
 _ID_NOISE = re.compile(
@@ -224,6 +224,15 @@ def main() -> None:
         print("perf_tripwire: no committed BENCH_r*.json — nothing to compare")
         return
     prev_path, prev_payload = prev
+    mismatched = tag_mismatches(current, prev_payload)
+    if mismatched:
+        print(
+            f"perf_tripwire: bench payload measures something other than "
+            f"{os.path.basename(prev_path)} — refusing to compare:"
+        )
+        for line in mismatched:
+            print(f"  {line}")
+        sys.exit(1)
     base_commit = subprocess.run(
         ["git", "log", "-1", "--format=%H", "--", os.path.basename(prev_path)],
         cwd=REPO, capture_output=True, text=True,
@@ -232,39 +241,8 @@ def main() -> None:
         print(f"perf_tripwire: {os.path.basename(prev_path)} not in git — skipping")
         return
 
-    # r13 timer-semantics bridge: if the current payload's fresh timer
-    # covers construction+execution but the committed baseline predates
-    # that change, gate on the exec-only twin so the comparison is
-    # like-for-like (otherwise every key would "regress" by its own
-    # construction time).
-    use_twin = (
-        current.get("fresh_timer") == "construct+exec"
-        and prev_payload.get("fresh_timer") != "construct+exec"
-    )
-    if use_twin:
-        print(
-            "perf_tripwire: baseline predates the construct+exec fresh "
-            "timer — comparing the exec-only twin (queries_fresh_exec)"
-        )
-    cur_f = _fresh_entries(current, exec_twin=use_twin)
+    cur_f = _fresh_entries(current)
     prev_f = _fresh_entries(prev_payload)
-    # r13: the sf10 leg moved from last-in-session to per-key fresh
-    # JVMs (bench.py sf10_leg_child) — numbers across DIFFERENT leg
-    # protocols measure different JIT/GC regimes and cannot be gated
-    # against each other. Skip the leg when protocols differ; once the
-    # baseline carries the same protocol tag, gating resumes.
-    cur_proto = (current.get("sf10") or {}).get("protocol")
-    prev_proto = (prev_payload.get("sf10") or {}).get("protocol")
-    if cur_proto != prev_proto:
-        dropped = [e for e in cur_f if e.startswith("sf10:")]
-        if dropped:
-            print(
-                "perf_tripwire: sf10 leg protocol changed "
-                f"({prev_proto!r} -> {cur_proto!r}) — skipping "
-                f"{len(dropped)} sf10 entr(y/ies) this round"
-            )
-        for e in dropped:
-            cur_f.pop(e, None)
     shared = sorted(set(cur_f) & set(prev_f))
     unchanged = [
         e for e in shared if _plan_unchanged(e.split(":", 1)[1], base_commit)
