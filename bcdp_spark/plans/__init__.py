@@ -1,12 +1,36 @@
 """Plan-inspection helpers: assert the physical plans we designed for are
 the plans we got (SURVEY.md §4 — pushdown, pruning, codegen, broadcast).
 Used by tests/test_plans.py as executable documentation of the scale
-story.
+story, and by tools/dump_plans.py and tools/perf_tripwire.py, which
+compare plan dumps after ``normalize``.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+# session-wide counters that renumber between two runs of one plan:
+# expression and subquery ids (#123, #45L), exchange plan ids, lambda
+# variables (lambda x_222), codegen variables, RDD ids
+# (MapPartitionsRDD[446]) and common-subexpression names
+_COUNTERS = (
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"(lambda \w+?)_\d+"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\bcv_\w+"), "cv_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with every session-wide counter replaced by N, so two
+    dumps of the same plan from different sessions compare equal."""
+    for pattern, repl in _COUNTERS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def physical_plan(df: DataFrame, execute: bool = False) -> str:
@@ -39,8 +63,6 @@ def has_pushed_filters(df: DataFrame) -> bool:
 
 def read_schema_columns(df: DataFrame) -> list[str]:
     """Columns actually read from parquet (column pruning check)."""
-    import re
-
     s = formatted(df)
     m = re.search(r"ReadSchema: struct<([^>]*)>", s)
     if not m:

@@ -171,7 +171,7 @@ def q_area_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r5 — zstd through both wrappings a real store uses: a v2 store with
 # the blosc container (cname='zstd', byte shuffle) UNDER a numcodecs
 # delta filter, and a v3 store with the bytes→zstd default chain. One
-# green driver row certifies the RFC 8878 decode, the blosc framing,
+# green driver row certifies the zstd decode, the blosc framing,
 # the filter chain, and the v3 codec routing at once. Values are 0.25
 # steps, so the delta encode and every sum are float-exact.
 # ---------------------------------------------------------------------------

@@ -9,11 +9,11 @@ whether each runs natively or in Python, is decided in this module only.
 Native vs pure:
 
 - lz4 (raw block), snappy (raw block) and zstd go through pyarrow's
-  bundled C libraries; pyarrow is a hard engine dependency. zstd falls
-  back to the RFC 8878 decoder in ``sources/zstd.py`` when the decoded
-  size is unknown (pyarrow needs it) or libzstd rejects the payload;
-  that decoder handles concatenated and skippable frames or raises the
-  real error.
+  bundled C libraries; pyarrow is a hard engine dependency. zstd reads
+  pyarrow's streaming decompressor, which needs no decoded size and
+  handles concatenated and skippable frames. With a known size it reads
+  at most size + 1 bytes, so an oversize frame fails without building
+  its whole output.
 - zlib, gzip, bz2 and lzma are the standard library's C modules.
 - blosclz (``sources/blosclz.py``) and lzf (``sources/lzf.py``) stay pure
   Python: pyarrow ships no native twin for them.
@@ -42,7 +42,6 @@ import pyarrow as pa
 
 from bcdp_spark.sources.blosclz import blosclz_compress, blosclz_decompress
 from bcdp_spark.sources.lzf import lzf_compress, lzf_decompress
-from bcdp_spark.sources.zstd import zstd_decompress_pure
 
 # what a corrupt payload raises inside the codecs below
 _ERRORS = (
@@ -95,12 +94,8 @@ def _snappy_decode(data: bytes, size: int | None, cfg: dict) -> bytes:
 
 
 def _zstd_decode(data: bytes, size: int | None, cfg: dict) -> bytes:
-    if size is not None:
-        try:
-            return bytes(_native("zstd").decompress(data, size))
-        except (OSError, pa.ArrowException):
-            pass  # the pure decoder either handles it or names the fault
-    return zstd_decompress_pure(data, size)
+    stream = pa.input_stream(pa.py_buffer(data), compression="zstd")
+    return stream.read() if size is None else stream.read(size + 1)
 
 
 def _lzma_decode(data: bytes, size: int | None, cfg: dict) -> bytes:

@@ -46,6 +46,22 @@ def test_levels_reach_the_codec():
     assert codecs.encode("gzip", _DATA, 1) == codecs.encode("gzip", _DATA, 1)
 
 
+def test_oversize_zstd_frame_fails_within_the_container_size():
+    """A frame that decodes to far more than its container says fails
+    after reading size + 1 bytes, not after building the whole output."""
+    import tracemalloc
+
+    frame = codecs.encode("zstd", bytes(64 << 20))
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="zstd"):
+            codecs.decode("zstd", frame, 4096)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+
+
 def test_zarr_lz4_chunk_with_overstated_prefix_raises(tmp_path):
     """numcodecs.LZ4 stores a LE uint32 size before the block; a prefix
     larger than the block decodes to must fail, not return the

@@ -13,10 +13,10 @@ import pytest
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 import perf_tripwire
+from bcdp_spark.plans import normalize
 from perf_tripwire import (
     THRESHOLD,
     _fresh_entries,
-    _normalize_plan,
     _warm_entries,
     flag_regressions,
     tag_mismatches,
@@ -27,12 +27,14 @@ from perf_tripwire import (
 def test_normalize_plan_ignores_expression_id_renumbering():
     """Dumps regenerated in a different process renumber every
     attribute; the comparison must see through that or every round-end
-    refresh would silently disarm the gate."""
+    refresh would silently disarm the gate. The tripwire compares dumps
+    with the same ``normalize`` as ``tools/dump_plans.py --check``."""
+    assert perf_tripwire.normalize is normalize
     a = "Output [2]: [event_type#13713, value#13714]\nArguments: x, [plan_id=60]"
     b = "Output [2]: [event_type#13969, value#13970]\nArguments: x, [plan_id=74]"
     c = "Output [2]: [event_type#13969, OTHER#13970]\nArguments: x, [plan_id=74]"
-    assert _normalize_plan(a) == _normalize_plan(b)
-    assert _normalize_plan(a) != _normalize_plan(c)
+    assert normalize(a) == normalize(b)
+    assert normalize(a) != normalize(c)
 
 
 def test_fresh_entries_exclude_warm_numbers():

@@ -521,9 +521,12 @@ def test_every_registry_key_has_a_plan_dump():
 def test_dump_plans_check_normalizes_run_specific_ids():
     """`tools/dump_plans.py --check` compares plans modulo what differs
     between two runs of one plan — expression IDs, exchange plan ids,
-    lambda-variable counters — and nothing else."""
+    lambda-variable counters, RDD ids, common-subexpression names — and
+    nothing else."""
     import importlib.util
     import os
+
+    from bcdp_spark.plans import normalize
 
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -532,9 +535,12 @@ def test_dump_plans_check_normalizes_run_specific_ids():
     spec = importlib.util.spec_from_file_location("dump_plans", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    assert mod.normalize is normalize
     a = ("Output [2]: [id#3048L, lat#12]\nArguments: hashpartitioning(lat#12, 8), "
-         "[plan_id=5265]\naggregate(v#7, 0.0, lambdafunction((lambda x_222#9)))")
+         "[plan_id=5265]\naggregate(v#7, 0.0, lambdafunction((lambda x_222#9)))\n"
+         "[_common_expr_1#40]\nScan ExistingRDD MapPartitionsRDD[12]")
     b = ("Output [2]: [id#17L, lat#3]\nArguments: hashpartitioning(lat#3, 8), "
-         "[plan_id=12]\naggregate(v#1, 0.0, lambdafunction((lambda x_3#2)))")
-    assert mod.normalize(a) == mod.normalize(b)
-    assert mod.normalize(a) != mod.normalize(b.replace("8)", "16)"))
+         "[plan_id=12]\naggregate(v#1, 0.0, lambdafunction((lambda x_3#2)))\n"
+         "[_common_expr_10#41]\nScan ExistingRDD MapPartitionsRDD[40]")
+    assert normalize(a) == normalize(b)
+    assert normalize(a) != normalize(b.replace("8)", "16)"))

@@ -12,12 +12,11 @@ from __future__ import annotations
 import difflib
 import fnmatch
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bcdp_spark.plans import formatted
+from bcdp_spark.plans import formatted, normalize
 from bcdp_spark.session import get_spark
 import bcdp_spark.queries as q
 
@@ -150,15 +149,6 @@ HEADLINE = (
     # round-8 — Rx5day (decimal-exact rolling window inside the frame)
     "q_rx5day",
 )
-
-
-def normalize(plan: str) -> str:
-    """Drop what differs between two runs of the same plan: expression
-    IDs (``#123``), exchange plan ids (``plan_id=45``) and the
-    session-wide counter in lambda variable names (``lambda x_222``)."""
-    plan = re.sub(r"#\d+L?", "#N", plan)
-    plan = re.sub(r"(lambda \w+?)_\d+", r"\1_N", plan)
-    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
 
 
 def main() -> None:

@@ -21,7 +21,11 @@ a slower host by timing alone — that failure mode is what the plan-dump
 diff and the oracle ladder cover.)
 
 Plan-unchanged = docs/plans/<key>.txt identical (git) between the
-commit that recorded the previous BENCH file and the current worktree.
+commit that recorded the previous BENCH file and the current worktree,
+after ``bcdp_spark.plans.normalize`` (the same comparison as
+``tools/dump_plans.py --check``): a dump regenerated in another session
+renumbers every attribute, so raw bytes would mark the whole registry
+plan-changed after each refresh and silently disarm the gate.
 Keys whose plan dump changed are skipped: their fresh number is
 expected to move, and the plan diff itself is the reviewable evidence.
 
@@ -40,6 +44,9 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
+sys.path.insert(0, REPO)
+
+from bcdp_spark.plans import normalize  # noqa: E402
 
 THRESHOLD = 1.25  # >25% round-over-round regression (VERDICT r11 item 6)
 
@@ -106,23 +113,6 @@ def tag_mismatches(current: dict, prev: dict) -> list[str]:
     return [f"{name}: baseline {p!r}, current {c!r}" for name, c, p in tags if c != p]
 
 
-_ID_NOISE = re.compile(
-    # expression IDs, plan ids, codegen variable names, subquery ids,
-    # and RDD ids (MapPartitionsRDD[446] — a session-global counter
-    # that renumbers on every dump, exactly like expression IDs)
-    r"#\d+|plan_id=\d+|cv_\w+|subquery#\d+|RDD\[\d+\]"
-)
-
-
-def _normalize_plan(text: str) -> str:
-    """Strip session-global counters (expression IDs, plan ids) — a
-    dump regenerated in a different process renumbers EVERY attribute
-    (#13713 -> #13969) while the plan itself is unchanged; comparing
-    raw bytes would mark the whole registry plan-changed after each
-    round-end refresh and silently disarm the gate."""
-    return _ID_NOISE.sub("#", text)
-
-
 def _plan_unchanged(key: str, base_commit: str) -> bool:
     dump = os.path.join("docs", "plans", f"{key}.txt")
     path = os.path.join(REPO, dump)
@@ -136,7 +126,7 @@ def _plan_unchanged(key: str, base_commit: str) -> bool:
         return False  # dump did not exist at the base commit
     with open(path) as fh:
         current = fh.read()
-    return _normalize_plan(shown.stdout) == _normalize_plan(current)
+    return normalize(shown.stdout) == normalize(current)
 
 
 def flag_regressions(
