@@ -136,19 +136,6 @@ def with_minhash(
     )
 
 
-def minhash_signature(col: str, num_perm: int = 64, k: int = 5) -> F.Column:
-    """Single-expression MinHash signature (same hash family as
-    ``with_minhash``). Prefer ``with_minhash`` in plans — this inline
-    form re-derives the shingle array per permutation and is kept only
-    for expression-context callers (small num_perm)."""
-    sh = _hashed_shingles_expr(col, k)
-
-    def perm_min(j: int) -> F.Column:
-        return F.array_min(F.transform(sh, lambda x: F.hash(x, F.lit(j))))
-
-    return F.array(*[perm_min(j) for j in range(num_perm)])
-
-
 def lsh_bucket_pairs(
     df: DataFrame,
     text_col: str,
@@ -1213,7 +1200,6 @@ def decontaminate(
     id_col: str = "doc_id",
     n: int = 13,
     sep: str = " ",
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / PaLM family of
     train-test overlap removal): flag every training document that
@@ -1228,10 +1214,7 @@ def decontaminate(
     NEVER shuffled on the gram: contaminated ids fall out of a
     broadcast left-semi over the exploded train grams, and only the
     (distinct) contaminated id set — bounded by |train| ids, 8 bytes
-    each — shuffles back for the final left join. Pass
-    ``broadcast_bench=False`` for pathological benchmark sizes; the
-    semi-join then shuffles on the gram string (hash to xxhash64
-    upstream if grams are long).
+    each — shuffles back for the final left join.
     """
     _guard_reserved(train, ("__toks", "__gram", "__contam"))
     _guard_reserved(bench, ("__toks", "__gram"))
@@ -1249,9 +1232,7 @@ def decontaminate(
             F.col(id_col), F.explode(g).alias("__gram")
         )
 
-    bg = grams(bench).select("__gram").distinct()
-    if broadcast_bench:
-        bg = F.broadcast(bg)
+    bg = F.broadcast(grams(bench).select("__gram").distinct())
     bad = (
         grams(train)
         .join(bg, "__gram", "left_semi")

@@ -39,19 +39,17 @@ def pagerank(
     dst: str = "dst",
     weight: str = "w",
     checkpoint_every: int = 0,
-    persist: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over an edge DataFrame → (node, rank).
 
-    ``persist`` (default) caches the loop-invariant relations (edges,
-    node set, out-weights) — still LAZY (no job at build time), but at
-    action time each is computed once instead of once per iteration
-    (without it the lineage re-derives the edge list k+1 times; the
-    plan dump showed 44 source scans for k=3 over a 2-scan input).
-    Callers running inside a larger cached pipeline can pass False.
-    Entries use the default MEMORY_AND_DISK level — evictable under
-    pressure, reclaimed at session close; a long-lived service calling
-    this repeatedly should unpersist after consuming the result.
+    The loop-invariant relations (edges, node set, out-weights) are
+    persisted — still LAZY (no job at build time), but at action time
+    each is computed once instead of once per iteration (without it
+    the lineage re-derives the edge list k+1 times; the plan dump
+    showed 44 source scans for k=3 over a 2-scan input). Entries use
+    the default MEMORY_AND_DISK level — evictable under pressure,
+    reclaimed at session close; a long-lived service calling this
+    repeatedly should unpersist after consuming the result.
     """
     e = edges.select(
         F.col(src).alias("src"),
@@ -64,10 +62,9 @@ def pagerank(
         .distinct()
     )
     outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    if persist:
-        e = e.persist()
-        nodes = nodes.persist()
-        outw = outw.persist()
+    e = e.persist()
+    nodes = nodes.persist()
+    outw = outw.persist()
     n_row = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     teleport = (1.0 - damping) / F.col("n")
 

@@ -53,16 +53,16 @@ def regrid_weighted(
     lon_col: str = "lon",
     value_col: str = "value",
     extra_keys: Sequence[str] = (),
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """Conservative-style regrid: join each source cell to its weight rows
     (src_lat, src_lon, dst_lat, dst_lon, w), then weighted-average into
-    destination cells. NULL source values drop out of both numerator and
-    denominator (mask-aware, matching the reference's fill-value
-    semantics)."""
-    w = F.broadcast(weights) if broadcast_weights else weights
+    destination cells. The weight table is broadcast: it has one row
+    per overlapping (source, destination) cell pair, a grid-sized
+    table, never a data-sized one. NULL source values drop out of both
+    numerator and denominator (mask-aware, matching the reference's
+    fill-value semantics)."""
     joined = df.join(
-        w,
+        F.broadcast(weights),
         (F.col(lat_col) == F.col("src_lat"))
         & (F.col(lon_col) == F.col("src_lon")),
         "inner",

@@ -34,12 +34,6 @@ def flat_sqnorm(a: str, dim: int) -> Column:
     )
 
 
-def cosine_expr(a: str, b: str, dim: int) -> Column:
-    return flat_dot(a, b, dim) / (
-        F.sqrt(flat_sqnorm(a, dim)) * F.sqrt(flat_sqnorm(b, dim))
-    )
-
-
 def _query_literal(query_vec) -> Column:
     return F.array(*[F.lit(float(x)) for x in query_vec])
 
@@ -144,24 +138,6 @@ def ann_topk(
     )
     cand = bucketed.filter(F.col("__bucket").isin(*sorted(probes)))
     return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
-def pairwise_cosine(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    threshold: float = 0.9,
-    nbits: int = 12,
-    seed: int = 42,
-) -> DataFrame:
-    """All-pairs similarity above a threshold via LSH blocking + exact
-    filter (the guarded alternative to a crossJoin)."""
-    from bcdp_spark.operators.dedup import embedding_near_dup
-
-    return embedding_near_dup(
-        df, id_col, vec_col, dim, threshold=threshold, nbits=nbits, seed=seed
-    )
 
 
 def ivf_assign(

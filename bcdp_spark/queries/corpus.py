@@ -440,7 +440,7 @@ FROM cells c LEFT JOIN d ON c.cell = d.cell
 """,
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bcdp_spark.queries.similarity import flat_dot, flat_sqnorm
+    from bcdp_spark.operators.similarity import flat_dot, flat_sqnorm
 
     utc(spark)
     dim = 64  # fixture embedding width (FIXTURES.md)

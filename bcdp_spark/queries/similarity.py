@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bcdp_spark.operators.similarity import flat_dot, flat_sqnorm
 from bcdp_spark.queries import register
 from bcdp_spark.queries._helpers import davg, davg_sql, utc
 from bcdp_spark.tables import table
@@ -23,40 +24,9 @@ def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product (matches DuckDB's loop order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def sqnorm(a: Column) -> Column:
     return F.aggregate(
         F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-# Flat (unrolled) variants for known dimensionality: higher-order lambdas
-# are interpreted per element, while an unrolled left-assoc expression stays
-# inside whole-stage codegen (~2× faster here). Same addition order, so
-# results are bit-identical to the fold versions (verified).
-def flat_dot(a: str, b: str, dim: int) -> Column:
-    return F.expr(
-        " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-            for i in range(dim)
-        )
-    )
-
-
-def flat_sqnorm(a: str, dim: int) -> Column:
-    return F.expr(
-        " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)"
-            for i in range(dim)
-        )
     )
 
 

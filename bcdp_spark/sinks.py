@@ -1,67 +1,127 @@
-"""Write-path data layout — the half of scan performance that lives in
-the SINK. Parquet readers (Spark, DuckDB, Trino…) skip row groups whose
-min/max statistics exclude the predicate; those statistics are only
-tight when rows arrive sorted by the columns queries filter on. At
-100 TB, writing events clustered by (user_id) turns a per-user scan
-from "read everything, filter" into "read the handful of row groups
-whose stats admit the key".
+"""Sinks: the gridded per-member exports (``to_netcdf``, ``to_zarr``,
+``to_grib2``) and the parquet maintenance writes (compaction,
+write-audit-publish, bucketed tables).
+
+The gridded sinks share one encode path. ``_per_member`` runs one
+applyInPandas task per ``by`` group, so each member's file is written
+from its own executor and never passes through the driver, and returns
+the write manifest: one row per file (by, path, n_rows, n_times).
+``_member_grid`` pivots that member's long-form rows back onto its dense
+(time[, lev], lat, lon) grid. Each sink adds only its encoder: CF
+coordinate variables and the classic NetCDF writer; time chunking and
+the Zarr v2/v3 writer; per-field range scaling and GRIB2 messages.
+
+The pivot is where the grid contract holds. Input that a grid cannot
+represent fails loudly rather than writing a file that silently lacks
+rows: two rows on one (time[, lev], lat, lon) cell, a NULL coordinate,
+or a member name that is NULL, empty, ``.``, ``..`` or holds a path
+separator raise ``ValueError`` naming the member (from the Spark task,
+so the driver sees it inside Spark's ``PythonException``). Grid cells
+no row covers, and NULL values, are written as the format's fill.
 
 Reference parity: bcdp sink surface (to_netcdf bundle output,
-bcdp/core.py [UNVERIFIED — /root/reference was empty at survey time;
-SURVEY.md §0]); the clustering idea is the standard warehouse
-sort-on-write (linear order ≈ 1-D Z-order).
+bcdp/core.py [UNVERIFIED; SURVEY.md §0]).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
+import os
+from collections.abc import Callable, Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 
 
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: Sequence[str],
-    num_files: int | None = None,
-    partition_by: Sequence[str] = (),
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered by ``sort_cols``: range-repartition so each
-    output file owns a disjoint key range, then sort within partitions so
-    every ROW GROUP's min/max is tight. ``repartitionByRange`` samples
-    ranges distributively — no driver materialization.
+def _member_grid(
+    pdf: pd.DataFrame, var_name: str, fill: float
+) -> tuple[dict, np.ndarray]:
+    """Pivot one member's long-form rows onto its dense grid.
 
-    ``partition_by`` layers directory-level pruning on top (coarse keys:
-    date, source); ``sort_cols`` handles the fine-grained keys that would
-    explode a directory scheme.
+    Returns ``(axes, grid)``: ``axes`` maps each of ``time[, lev], lat,
+    lon`` to its sorted distinct values, and ``grid`` holds one float
+    per combination of them, ``fill`` where no row lands or the row's
+    value is NULL. Raises ValueError on a NULL coordinate and on two
+    rows for one cell (the grid has room for one of them only).
     """
-    out = df
-    if num_files is not None:
-        out = out.repartitionByRange(num_files, *sort_cols)
-    else:
-        out = out.repartitionByRange(*sort_cols)
-    out = out.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    names = ("time", "lat", "lon")
+    if "lev" in pdf.columns:
+        names = ("time", "lev", "lat", "lon")
+    axes, codes = {}, []
+    for name in names:
+        col = pdf[name]
+        if col.isna().any():
+            raise ValueError(f"NULL {name} coordinate")
+        axes[name], inverse = np.unique(col.to_numpy(), return_inverse=True)
+        codes.append(inverse)
+    shape = tuple(len(v) for v in axes.values())
+    cells = np.ravel_multi_index(codes, shape)
+    shared = np.bincount(cells) > 1
+    if shared.any():
+        at = np.unravel_index(int(shared.argmax()), shape)
+        where = ", ".join(f"{n}={axes[n][i]}" for n, i in zip(names, at))
+        raise ValueError(f"more than one row for grid cell ({where})")
+    grid = np.full(shape, fill, dtype=float)
+    vals = pdf[var_name].to_numpy(dtype=float)
+    ok = ~np.isnan(vals)
+    np.put(grid, cells[ok], vals[ok])
+    return axes, grid
 
 
-def compact(
+def _cf_coords(axes: dict) -> dict:
+    """CF coordinate variables of a member grid: time as float seconds
+    since the epoch, the spatial axes as float64."""
+    secs = (
+        pd.DatetimeIndex(axes["time"]) - pd.Timestamp("1970-01-01")
+    ) / pd.Timedelta(seconds=1)
+    out = {
+        "time": (
+            ["time"],
+            np.asarray(secs, dtype="float64"),
+            {"units": "seconds since 1970-01-01", "calendar": "standard"},
+        )
+    }
+    for name in ("lat", "lon", "lev"):
+        if name in axes:
+            out[name] = ([name], np.asarray(axes[name], dtype=float), {})
+    return out
+
+
+def _per_member(
     df: DataFrame,
-    path: str,
-    target_partitions: int,
-    mode: str = "overwrite",
-) -> None:
-    """Small-files compaction: coalesce (no shuffle) to ``target_partitions``
-    outputs. Use after incremental appends produce many tiny files; at
-    scale, schedule per partition-directory so one straggler directory
-    doesn't serialize the job."""
-    df.coalesce(target_partitions).write.mode(mode).parquet(path)
+    out_dir: str,
+    by: str,
+    write: Callable[[pd.DataFrame, str, str], dict],
+    schema: str = "",
+) -> DataFrame:
+    """One applyInPandas task per ``by`` group calls ``write(pdf,
+    member, stem)``, which writes ``stem`` + its format's suffix under
+    ``out_dir`` and returns the manifest columns it owns (``path``,
+    ``n_times`` and any declared in ``schema``, e.g. ``", nbits int"``).
+    The member name must be usable as a file name inside ``out_dir``;
+    a ValueError from ``write`` is re-raised naming the member."""
+
+    def one(pdf: pd.DataFrame) -> pd.DataFrame:
+        member = pdf[by].iloc[0]
+        name = "" if pd.isna(member) else str(member)
+        if name in ("", ".", "..") or "/" in name or os.sep in name:
+            raise ValueError(
+                f"member {member!r} in column {by!r} is not a file name "
+                f"inside {out_dir!r}"
+            )
+        try:
+            row = write(pdf, name, os.path.join(out_dir, name))
+        except ValueError as exc:
+            raise ValueError(f"member {name!r}: {exc}") from exc
+        row = {by: name, "n_rows": len(pdf), **row}
+        return pd.DataFrame({k: [v] for k, v in row.items()})
+
+    os.makedirs(out_dir, exist_ok=True)
+    return df.groupBy(by).applyInPandas(
+        one,
+        schema=f"{by} string, path string, n_rows long, n_times long{schema}",
+    )
 
 
 def to_netcdf(
@@ -72,100 +132,35 @@ def to_netcdf(
     fill_value: float = -9.96921e36,
 ) -> DataFrame:
     """NetCDF export (reference `to_netcdf`, bcdp/core.py [UNVERIFIED]):
-    write one classic-format .nc file per ``by`` group from long-form
-    rows (name, time, lat, lon, value), using the vendored pure-Python
-    writer (bcdp_spark.sources.netcdf3) — no codec dependency.
+    one classic-format ``<member>.nc`` per ``by`` group from long-form
+    rows (name, time[, lev], lat, lon, value), written from executors
+    by the vendored pure-Python writer (bcdp_spark.sources.netcdf3), no
+    codec dependency. Returns the manifest (by, path, n_rows, n_times).
 
-    Distributed: one applyInPandas task per group pivots that member's
-    rows back to the (time, lat, lon) grid and writes its file from the
-    executor; the returned DataFrame (one row per file: path, n_rows,
-    n_times) is the write manifest. Missing grid cells and NULL values
-    are encoded as the CF _FillValue. File size = one member's grid —
-    the natural NetCDF granularity (a 100 TB ensemble exports as many
-    member-files in parallel, never through the driver).
+    The shared pivot (``_member_grid``) lays each member onto its
+    (time[, lev], lat, lon) grid; missing cells and NULL values are
+    written as the CF ``_FillValue``. Duplicate cells, NULL coordinates
+    and member names that are not file names raise ValueError rather
+    than dropping rows.
     """
-    import os
 
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F  # noqa: F401 (API symmetry)
-
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def write(pdf: pd.DataFrame, member: str, stem: str) -> dict:
         from bcdp_spark.sources.netcdf3 import write_netcdf3
 
-        member = str(pdf[by].iloc[0])
-        has_lev = "lev" in pdf.columns
-        times = np.sort(pdf["time"].unique())
-        lats = np.sort(pdf["lat"].unique())
-        lons = np.sort(pdf["lon"].unique())
-        t_idx = {v: i for i, v in enumerate(times)}
-        a_idx = {v: i for i, v in enumerate(lats)}
-        o_idx = {v: i for i, v in enumerate(lons)}
-        vals = pdf[var_name].to_numpy(dtype=float)
-        ti = pdf["time"].map(t_idx).to_numpy()
-        ai = pdf["lat"].map(a_idx).to_numpy()
-        oi = pdf["lon"].map(o_idx).to_numpy()
-        ok = ~np.isnan(vals)
-        epoch = pd.Timestamp("1970-01-01")
-        tnum = (
-            (pd.DatetimeIndex(times) - epoch) / pd.Timedelta(seconds=1)
-        ).to_numpy()
-        coord_vars = {
-            "time": (
-                ["time"],
-                tnum,
-                {"units": "seconds since 1970-01-01", "calendar": "standard"},
-            ),
-            "lat": (["lat"], np.asarray(lats, dtype=float), {}),
-            "lon": (["lon"], np.asarray(lons, dtype=float), {}),
-        }
-        if has_lev:
-            levs = np.sort(pdf["lev"].unique())
-            l_idx = {v: i for i, v in enumerate(levs)}
-            li = pdf["lev"].map(l_idx).to_numpy()
-            grid = np.full(
-                (len(times), len(levs), len(lats), len(lons)), fill_value
-            )
-            grid[ti[ok], li[ok], ai[ok], oi[ok]] = vals[ok]
-            coord_vars["lev"] = (["lev"], np.asarray(levs, dtype=float), {})
-            dims = {
-                "time": len(times),
-                "lev": len(levs),
-                "lat": len(lats),
-                "lon": len(lons),
-            }
-            var_dims = ["time", "lev", "lat", "lon"]
-        else:
-            grid = np.full((len(times), len(lats), len(lons)), fill_value)
-            grid[ti[ok], ai[ok], oi[ok]] = vals[ok]
-            dims = {"time": len(times), "lat": len(lats), "lon": len(lons)}
-            var_dims = ["time", "lat", "lon"]
+        axes, grid = _member_grid(pdf, var_name, fill_value)
         raw = write_netcdf3(
-            dims=dims,
+            dims={a: len(v) for a, v in axes.items()},
             variables={
-                **coord_vars,
-                var_name: (var_dims, grid, {"_FillValue": fill_value}),
+                **_cf_coords(axes),
+                var_name: (list(axes), grid, {"_FillValue": fill_value}),
             },
             record_dim="time",
         )
-        path = os.path.join(out_dir, f"{member}.nc")
-        with open(path, "wb") as fh:
+        with open(stem + ".nc", "wb") as fh:
             fh.write(raw)
-        return pd.DataFrame(
-            {
-                by: [member],
-                "path": [path],
-                "n_rows": [len(pdf)],
-                "n_times": [len(times)],
-            }
-        )
+        return {"path": stem + ".nc", "n_times": grid.shape[0]}
 
-    os.makedirs(out_dir, exist_ok=True)
-    return df.groupBy(by).applyInPandas(
-        write_group,
-        schema=f"{by} string, path string, n_rows long, n_times long",
-    )
+    return _per_member(df, out_dir, by, write)
 
 
 def to_zarr(
@@ -177,18 +172,19 @@ def to_zarr(
     zarr_format: int = 2,
     shard_time: int | None = None,
 ) -> DataFrame:
-    """Zarr v2 export (S6 sibling of ``to_netcdf``): one chunked store
-    per ``by`` group, written from executors via the vendored writer
-    (``bcdp_spark.sources.zarr.write_zarr`` — stdlib zlib chunks,
-    xarray-convention ``_ARRAY_DIMENSIONS``), so ``load_zarr`` and any
-    public Zarr v2 reader can reingest it.
+    """Zarr export (S6 sibling of ``to_netcdf``): one chunked
+    ``<member>.zarr`` store per ``by`` group, written from executors by
+    the vendored writer (``bcdp_spark.sources.zarr.write_zarr`` — stdlib
+    zlib chunks, xarray-convention ``_ARRAY_DIMENSIONS``), so
+    ``load_zarr`` and any public Zarr reader can reingest it. Returns
+    the manifest (by, path, n_rows, n_times).
 
-    Distributed: one applyInPandas task per member pivots that member's
-    long-form rows back to the (time[, lev], lat, lon) grid and writes
-    its store; chunking is along time (``time_chunk`` steps per chunk)
-    — the axis a 100 TB ensemble appends and subsets on, so downstream
-    time-bounded reads prune chunks. NULL values are encoded as NaN
-    (float fill), round-tripping to NULL on read.
+    The shared pivot (``_member_grid``) lays each member onto its
+    (time[, lev], lat, lon) grid, NaN where a cell is missing or NULL
+    (NULL again on read); it raises ValueError on duplicate cells, NULL
+    coordinates and member names that are not file names. Chunks run
+    along time (``time_chunk`` steps each), the axis a 100 TB ensemble
+    appends and subsets on, so time-bounded reads prune chunks.
 
     ``zarr_format=3`` writes the v3 layout (zarr.json metadata, default
     chunk-key encoding, bytes+gzip codecs); ``shard_time`` additionally
@@ -199,105 +195,134 @@ def to_zarr(
         raise ValueError(f"zarr_format must be 2 or 3, got {zarr_format}")
     if shard_time is not None and zarr_format != 3:
         raise ValueError("shard_time requires zarr_format=3")
-    import os
 
-    import numpy as np
-    import pandas as pd
+    def write(pdf: pd.DataFrame, member: str, stem: str) -> dict:
+        from bcdp_spark.sources.zarr import write_zarr, write_zarr_v3
 
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bcdp_spark.sources.zarr import write_zarr
-
-        member = str(pdf[by].iloc[0])
-        has_lev = "lev" in pdf.columns
-        times = np.sort(pdf["time"].unique())
-        lats = np.sort(pdf["lat"].unique())
-        lons = np.sort(pdf["lon"].unique())
-        t_idx = {v: i for i, v in enumerate(times)}
-        a_idx = {v: i for i, v in enumerate(lats)}
-        o_idx = {v: i for i, v in enumerate(lons)}
-        vals = pdf[var_name].to_numpy(dtype=float)
-        ti = pdf["time"].map(t_idx).to_numpy()
-        ai = pdf["lat"].map(a_idx).to_numpy()
-        oi = pdf["lon"].map(o_idx).to_numpy()
-        epoch = pd.Timestamp("1970-01-01")
-        tnum = (
-            (pd.DatetimeIndex(times) - epoch) / pd.Timedelta(seconds=1)
-        ).to_numpy()
-        coord_vars = {
-            "time": (
-                ["time"],
-                np.asarray(tnum, dtype="float64"),
-                {"units": "seconds since 1970-01-01", "calendar": "standard"},
-            ),
-            "lat": (["lat"], np.asarray(lats, dtype=float), {}),
-            "lon": (["lon"], np.asarray(lons, dtype=float), {}),
-        }
-        if has_lev:
-            levs = np.sort(pdf["lev"].unique())
-            l_idx = {v: i for i, v in enumerate(levs)}
-            li = pdf["lev"].map(l_idx).to_numpy()
-            grid = np.full(
-                (len(times), len(levs), len(lats), len(lons)), np.nan
-            )
-            grid[ti, li, ai, oi] = vals
-            coord_vars["lev"] = (["lev"], np.asarray(levs, dtype=float), {})
-            dims = {
-                "time": len(times),
-                "lev": len(levs),
-                "lat": len(lats),
-                "lon": len(lons),
-            }
-            var_dims = ["time", "lev", "lat", "lon"]
-            chunks = (
-                min(time_chunk, len(times)),
-                len(levs),
-                len(lats),
-                len(lons),
-            )
-        else:
-            grid = np.full((len(times), len(lats), len(lons)), np.nan)
-            grid[ti, ai, oi] = vals
-            dims = {"time": len(times), "lat": len(lats), "lon": len(lons)}
-            var_dims = ["time", "lat", "lon"]
-            chunks = (min(time_chunk, len(times)), len(lats), len(lons))
-        store = os.path.join(out_dir, f"{member}.zarr")
-        variables = {**coord_vars, var_name: (var_dims, grid, {})}
-        if zarr_format == 3:
-            from bcdp_spark.sources.zarr import write_zarr_v3
-
-            if shard_time is not None:
-                outer = (min(shard_time, len(times)),) + tuple(chunks[1:])
-                write_zarr_v3(
-                    store, dims=dims, variables=variables,
-                    chunks={var_name: outer},
-                    shards={var_name: chunks},
-                )
-            else:
-                write_zarr_v3(
-                    store, dims=dims, variables=variables,
-                    chunks={var_name: chunks},
-                )
-        else:
+        axes, grid = _member_grid(pdf, var_name, np.nan)
+        dims = {a: len(v) for a, v in axes.items()}
+        variables = {**_cf_coords(axes), var_name: (list(axes), grid, {})}
+        chunks = (min(time_chunk, grid.shape[0]),) + grid.shape[1:]
+        store = stem + ".zarr"
+        if zarr_format == 2:
             write_zarr(
-                store,
-                dims=dims,
-                variables=variables,
+                store, dims=dims, variables=variables,
                 chunks={var_name: chunks},
             )
-        return pd.DataFrame(
-            {
-                by: [member],
-                "path": [store],
-                "n_rows": [len(pdf)],
-                "n_times": [len(times)],
-            }
+        elif shard_time is None:
+            write_zarr_v3(
+                store, dims=dims, variables=variables,
+                chunks={var_name: chunks},
+            )
+        else:
+            outer = (min(shard_time, grid.shape[0]),) + grid.shape[1:]
+            write_zarr_v3(
+                store, dims=dims, variables=variables,
+                chunks={var_name: outer}, shards={var_name: chunks},
+            )
+        return {"path": store, "n_times": grid.shape[0]}
+
+    return _per_member(df, out_dir, by, write)
+
+
+def to_grib2(
+    df: DataFrame,
+    out_dir: str,
+    by: str = "name",
+    var_name: str = "value",
+    nbits: int = 16,
+    member_numbers: dict | None = None,
+    derived_codes: dict | None = None,
+    ens_size: int = 0,
+) -> DataFrame:
+    """GRIB2 export: one ``<member>.grib2`` cycle file per ``by`` group,
+    one message per time step, written from executors with the vendored
+    WMO FM 92 writer (bcdp_spark.sources.grib2) — the to_netcdf/to_zarr
+    sink contract, reingestable by ``load_grib2``. The returned manifest
+    has one row per file (by, path, n_rows, n_times, nbits).
+
+    The shared pivot (``_member_grid``) lays each member onto its
+    (time, lat, lon) grid and raises ValueError on duplicate cells, NULL
+    coordinates and member names that are not file names. GRIB2
+    messages are single-level, so a ``lev`` column raises ValueError
+    before any task runs: subset one level first.
+
+    Each message is simple-packed with a per-field range scaling: the
+    reference value is the field minimum (as the IEEE-float32 GRIB
+    stores), the binary scale E is the smallest power of two whose
+    ``nbits`` steps span the range — quantization error is bounded by
+    2^E/2 ≤ range/(2^nbits − 1), GRIB's native lossy contract (nbits=16
+    keeps ~4-5 significant digits; raise for more). NaNs become bitmap
+    points and reload as NULL.
+
+    ``member_numbers`` (group label → perturbation number) switches
+    the product template to 4.1 (individual ensemble forecast), so the
+    member identity travels IN-BAND — readers recover it from the
+    ``member`` column instead of the file name. ``derived_codes``
+    (group label → WMO table 4.7 code, e.g. ``{"em": 0, "es": 2}``)
+    instead emits 4.2 derived-product messages — the GEFS geavg/gespr
+    write side; ``ens_size`` stamps the ensemble-size octet. Both
+    dicts are constant-size (one entry per output file) and ship to
+    executors via the closure.
+    """
+    if member_numbers is not None and derived_codes is not None:
+        raise ValueError(
+            "member_numbers and derived_codes are mutually exclusive"
+        )
+    if "lev" in df.columns:
+        raise ValueError(
+            "to_grib2 writes single-level (time, lat, lon) fields, but "
+            "the input has a lev column; subset one level first"
         )
 
-    os.makedirs(out_dir, exist_ok=True)
-    return df.groupBy(by).applyInPandas(
-        write_group,
-        schema=f"{by} string, path string, n_rows long, n_times long",
-    )
+    def write(pdf: pd.DataFrame, member: str, stem: str) -> dict:
+        from bcdp_spark.sources.grib2 import write_grib2_message
+
+        axes, grid = _member_grid(pdf, var_name, np.nan)
+        if member_numbers is not None:
+            ens = {
+                "member": int(member_numbers[member]),
+                "ens_size": len(member_numbers),
+            }
+        elif derived_codes is not None:
+            ens = {
+                "derived": int(derived_codes[member]),
+                "ens_size": int(ens_size),
+            }
+        else:
+            ens = {}
+        lats = np.asarray(axes["lat"], dtype=float)
+        lons = np.asarray(axes["lon"], dtype=float)
+        msgs = []
+        for t, field in zip(axes["time"], grid):
+            finite = field[~np.isnan(field)]
+            lo = float(finite.min()) if finite.size else 0.0
+            ref = float(np.float32(lo))
+            if ref > lo:  # the float32 reference must not exceed the minimum
+                ref = float(np.nextafter(np.float32(lo), -np.inf))
+            if finite.size == 0 or finite.max() == lo:
+                field = field - lo + ref  # constant field: exact
+                e_scale, bits = 0, 0
+            else:
+                span = float(finite.max()) - ref
+                e_scale = math.ceil(math.log2(span / (2**nbits - 1)))
+                bits = nbits
+            msgs.append(
+                write_grib2_message(
+                    field, lats, lons, pd.Timestamp(t).to_pydatetime(),
+                    forecast_hours=0, ref_value=ref,
+                    binary_scale=e_scale, nbits=bits, **ens,
+                )
+            )
+        with open(stem + ".grib2", "wb") as fh:
+            fh.write(b"".join(msgs))
+        return {
+            "path": stem + ".grib2",
+            "n_times": grid.shape[0],
+            "nbits": nbits,
+        }
+
+    return _per_member(df, out_dir, by, write, schema=", nbits int")
 
 
 def compact_parquet(
@@ -318,9 +343,6 @@ def compact_parquet(
     Driver work is one file listing (metadata-only); data moves executor
     to executor. With ``partition_by`` the repartition keys on those
     columns instead, so each output directory compacts internally."""
-    import math
-    import os
-
     n_files = 0
     bytes_in = 0
     for root, _dirs, files in os.walk(in_path):
@@ -367,7 +389,6 @@ def write_audit_publish(
     the staging version removed. On object stores the equivalent of the
     link swap is a metadata pointer swap, which this seam isolates.
     """
-    import os
     import re
     import shutil
 
@@ -412,134 +433,6 @@ def write_audit_publish(
     for old in existing[:-1]:  # keep current + immediately previous
         shutil.rmtree(f"{base}.__v{old}__", ignore_errors=True)
     return {"published": True, "version": v}
-
-
-def to_grib2(
-    df: DataFrame,
-    out_dir: str,
-    by: str = "name",
-    var_name: str = "value",
-    nbits: int = 16,
-    member_numbers: dict | None = None,
-    derived_codes: dict | None = None,
-    ens_size: int = 0,
-) -> DataFrame:
-    """GRIB2 export: one cycle file per ``by`` group, one message per
-    time step, written from executors with the vendored WMO FM 92
-    writer (bcdp_spark.sources.grib2) — the to_netcdf/to_zarr sink
-    contract, reingestable by ``load_grib2``.
-
-    Each message is simple-packed with a per-field range scaling: the
-    reference value is the field minimum (as the IEEE-float32 GRIB
-    stores), the binary scale E is the smallest power of two whose
-    ``nbits`` steps span the range — quantization error is bounded by
-    2^E/2 ≤ range/(2^nbits − 1), GRIB's native lossy contract (nbits=16
-    keeps ~4-5 significant digits; raise for more). NaNs become bitmap
-    points and reload as NULL. The returned manifest has one row per
-    file (path, n_rows, n_times, nbits).
-
-    ``member_numbers`` (group label → perturbation number) switches
-    the product template to 4.1 (individual ensemble forecast), so the
-    member identity travels IN-BAND — readers recover it from the
-    ``member`` column instead of the file name. ``derived_codes``
-    (group label → WMO table 4.7 code, e.g. ``{"em": 0, "es": 2}``)
-    instead emits 4.2 derived-product messages — the GEFS geavg/gespr
-    write side; ``ens_size`` stamps the ensemble-size octet. Both
-    dicts are constant-size (one entry per output file) and ship to
-    executors via the closure.
-    """
-    if member_numbers is not None and derived_codes is not None:
-        raise ValueError(
-            "member_numbers and derived_codes are mutually exclusive"
-        )
-    import math
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bcdp_spark.sources.grib2 import write_grib2_message
-
-        member = str(pdf[by].iloc[0])
-        times = np.sort(pdf["time"].unique())
-        lats = np.sort(pdf["lat"].unique())
-        lons = np.sort(pdf["lon"].unique())
-        t_idx = {v: i for i, v in enumerate(times)}
-        a_idx = {v: i for i, v in enumerate(lats)}
-        o_idx = {v: i for i, v in enumerate(lons)}
-        vals = pdf[var_name].to_numpy(dtype=float)
-        ti = pdf["time"].map(t_idx).to_numpy()
-        ai = pdf["lat"].map(a_idx).to_numpy()
-        oi = pdf["lon"].map(o_idx).to_numpy()
-        grid = np.full((len(times), len(lats), len(lons)), np.nan)
-        ok = ~np.isnan(vals)
-        grid[ti[ok], ai[ok], oi[ok]] = vals[ok]
-        msgs = b""
-        for t in range(len(times)):
-            field = grid[t]
-            finite = field[~np.isnan(field)]
-            if finite.size == 0 or finite.max() == finite.min():
-                ref = float(finite[0]) if finite.size else 0.0
-                ref32 = float(np.float32(ref))
-                if ref32 > ref:  # float32 must not exceed the minimum
-                    ref32 = float(np.nextafter(np.float32(ref), -np.inf))
-                field = field - ref + ref32  # constant field: exact
-                e_scale, bits = 0, 0
-                ref = ref32
-            else:
-                ref = float(finite.min())
-                ref32 = float(np.float32(ref))
-                if ref32 > ref:
-                    ref32 = float(np.nextafter(np.float32(ref), -np.inf))
-                ref = ref32
-                span = float(finite.max()) - ref
-                e_scale = math.ceil(
-                    math.log2(span / (2**nbits - 1))
-                )
-                bits = nbits
-            if member_numbers is not None:
-                ens = {
-                    "member": int(member_numbers[member]),
-                    "ens_size": len(member_numbers),
-                }
-            elif derived_codes is not None:
-                ens = {
-                    "derived": int(derived_codes[member]),
-                    "ens_size": int(ens_size),
-                }
-            else:
-                ens = {}
-            msgs += write_grib2_message(
-                field,
-                np.asarray(lats, dtype=float),
-                np.asarray(lons, dtype=float),
-                pd.Timestamp(times[t]).to_pydatetime(),
-                forecast_hours=0,
-                ref_value=ref,
-                binary_scale=e_scale,
-                nbits=bits,
-                **ens,
-            )
-        path = os.path.join(out_dir, f"{member}.grib2")
-        with open(path, "wb") as fh:
-            fh.write(msgs)
-        return pd.DataFrame(
-            {
-                by: [member],
-                "path": [path],
-                "n_rows": [len(pdf)],
-                "n_times": [len(times)],
-                "nbits": [nbits],
-            }
-        )
-
-    os.makedirs(out_dir, exist_ok=True)
-    return df.groupBy(by).applyInPandas(
-        write_group,
-        schema=f"{by} string, path string, n_rows long, n_times long, "
-        "nbits int",
-    )
 
 
 def write_bucketed_table(

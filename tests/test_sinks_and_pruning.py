@@ -3,6 +3,10 @@ pruning on read (SURVEY.md §4), and the binaryFile source."""
 
 from __future__ import annotations
 
+import re
+from datetime import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -265,3 +269,173 @@ def test_write_bucketed_table_api(spark):
         assert spark.table("bkt_api").count() == 200
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_api")
+
+
+# ------------------------------------------------ gridded per-member sinks
+_GRID_WRITES = {
+    "netcdf": lambda ens, out: ens.to_netcdf(out),
+    "zarr_v2": lambda ens, out: ens.to_zarr(out, time_chunk=2),
+    "zarr_v3_sharded": lambda ens, out: ens.to_zarr(
+        out, time_chunk=1, zarr_format=3, shard_time=2
+    ),
+    "grib2": lambda ens, out: ens.to_grib2(out),
+}
+
+
+def _reload(spark, sink, path):
+    from bcdp_spark.sources.grib2 import load_grib2
+    from bcdp_spark.sources.netcdf import load_netcdf
+    from bcdp_spark.sources.zarr import load_zarr
+
+    load = {"netcdf": load_netcdf, "grib2": load_grib2}.get(sink, load_zarr)
+    return load(spark, path)
+
+
+def _grid_frame(spark, levs=()):
+    """Complete (time[, lev], lat, lon) grids of seeded doubles for two
+    members m0 and m1, with one NULL value."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    space = [
+        (lv, la, lo)
+        for lv in (levs or (None,))
+        for la in (-15.0, 15.0)
+        for lo in (0.0, 120.0, 240.0)
+    ]
+    rows = []
+    for m in ("m0", "m1"):
+        for d in range(3):
+            t = datetime(2001, 3, 1 + d)
+            for lv, la, lo in space:
+                v = float(rng.normal(280.0, 7.0))
+                rows.append((m, t, *((lv,) if levs else ()), la, lo, v))
+    rows[4] = rows[4][:-1] + (None,)
+    lev = "lev double, " if levs else ""
+    return spark.createDataFrame(
+        rows,
+        f"name string, time timestamp, {lev}lat double, lon double, "
+        "value double",
+    )
+
+
+@pytest.mark.parametrize(
+    "sink,ndim",
+    [(s, 3) for s in _GRID_WRITES]
+    + [(s, 4) for s in ("netcdf", "zarr_v2", "zarr_v3_sharded")],
+)
+def test_gridded_sink_round_trip(spark, tmp_path, sink, ndim):
+    """Every gridded sink writes what its loader reads back: the same
+    rows per member, the NULL value included; GRIB2 within its simple-
+    packing bound range/(2^nbits - 1) per field."""
+    from bcdp_spark.ensemble import Ensemble
+
+    df = _grid_frame(spark, (500.0, 850.0) if ndim == 4 else ())
+    space = ("lev", "lat", "lon") if ndim == 4 else ("lat", "lon")
+    ens = Ensemble(df, space_cols=space)
+    manifest = _GRID_WRITES[sink](ens, str(tmp_path / sink)).collect()
+    assert sorted(m["name"] for m in manifest) == ["m0", "m1"]
+    keys = ["time", *space]
+    for m in manifest:
+        want = (
+            df.filter(F.col("name") == m["name"]).toPandas()
+            .sort_values(keys).reset_index(drop=True)
+        )
+        got = (
+            _reload(spark, sink, m["path"]).select(*keys, "value").toPandas()
+            .sort_values(keys).reset_index(drop=True)
+        )
+        assert (m["n_rows"], m["n_times"]) == (len(want), 3)
+        assert got[keys].equals(want[keys])
+        assert got.value.isna().equals(want.value.isna())
+        if sink != "grib2":
+            assert got.value.dropna().equals(want.value.dropna())
+            continue
+        span = want.groupby("time").value.agg(lambda v: v.max() - v.min())
+        bound = want.time.map(span) / (2**16 - 1) + 1e-12
+        assert not ((got.value - want.value).abs() > bound).any()
+
+
+def test_to_grib2_rejects_a_lev_column(spark, tmp_path):
+    """GRIB2 messages are single-level: a 4-D ensemble raises on the
+    driver instead of writing one level's values per cell."""
+    from bcdp_spark.ensemble import Ensemble
+
+    ens = Ensemble(
+        _grid_frame(spark, (500.0, 850.0)), space_cols=("lev", "lat", "lon")
+    )
+    with pytest.raises(ValueError, match="lev column"):
+        ens.to_grib2(str(tmp_path / "gb"))
+    assert not (tmp_path / "gb").exists()
+
+
+def _duplicate_cell(df):
+    one = (F.col("name") == "m1") & (F.col("lat") > 0) & (F.col("lon") == 0)
+    return df.union(df.filter(one & (F.col("time") == datetime(2001, 3, 2))))
+
+
+def _rename_m1(bad):
+    return lambda df: df.withColumn(
+        "name",
+        F.when(F.col("name") == "m1", F.lit(bad)).otherwise(F.col("name")),
+    )
+
+
+_DUPLICATE = (
+    r"member 'm1': more than one row for grid cell "
+    r"\(time=2001-03-02T00:00.*, lat=15\.0, lon=0\.0\)"
+)
+_NULL_LAT = (
+    lambda df: df.withColumn(
+        "lat",
+        F.when((F.col("name") == "m0") & (F.col("lon") > 200), None)
+        .otherwise(F.col("lat")),
+    ),
+    "member 'm0': NULL lat coordinate",
+)
+_NULL_TIME = (
+    lambda df: df.withColumn(
+        "time", F.when(F.col("name") == "m1", None).otherwise(F.col("time"))
+    ),
+    "member 'm1': NULL time coordinate",
+)
+
+
+@pytest.mark.parametrize(
+    "sink,edit,message",
+    [
+        pytest.param(s, _duplicate_cell, _DUPLICATE, id=f"duplicate-{s}")
+        for s in ("netcdf", "zarr_v2", "grib2")
+    ]
+    + [
+        pytest.param("zarr_v2", *_NULL_LAT, id="null_lat-zarr_v2"),
+        pytest.param("netcdf", *_NULL_TIME, id="null_time-netcdf"),
+    ]
+    + [
+        pytest.param(
+            s,
+            _rename_m1(bad),
+            re.escape(f"member {bad!r} in column 'name' is not a file name"),
+            id=f"member_{bad!r}-{s}",
+        )
+        for s, bad in [
+            ("netcdf", None), ("netcdf", "../escaped"), ("zarr_v2", ""),
+            ("zarr_v2", "."), ("grib2", ".."), ("grib2", "a/b"),
+        ]
+    ],
+)
+def test_gridded_sink_rejects_what_a_grid_cannot_hold(
+    spark, tmp_path, sink, edit, message
+):
+    """A duplicate cell, a NULL coordinate or a member name that is not a
+    file name raises ValueError naming the member, instead of dropping
+    rows or writing outside the output directory."""
+    from pyspark.errors import PythonException
+
+    from bcdp_spark.ensemble import Ensemble
+
+    out = tmp_path / "out" / sink
+    ens = Ensemble(edit(_grid_frame(spark)))
+    with pytest.raises(PythonException, match="ValueError: " + message):
+        _GRID_WRITES[sink](ens, str(out)).collect()
+    assert [p.name for p in (tmp_path / "out").iterdir()] == [sink]

@@ -93,7 +93,7 @@ def ops(spark, sf_dir):
         embedding_near_dup,
         lsh_bucket_pairs,
     )
-    from bcdp_spark.queries.similarity import flat_dot, flat_sqnorm
+    from bcdp_spark.operators.similarity import flat_dot, flat_sqnorm
 
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders")
